@@ -85,15 +85,44 @@ object Ivf {
       .select("id", "v", "list_id")
   }
 
-  /** Assign each query to its `nProbe` closest centroids. */
-  def probeLists(queries: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
-    val scored = queries.crossJoin(broadcast(cents))
-      .select(col("id").as("q_id"), col("v").as("q_v"), col("list_id"),
-        Vectors.cosine4(col("v"), col("centroid")).as("c_cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("c_cos").desc, col("list_id").asc)
-    scored.withColumn("p", row_number().over(w)).filter(col("p") <= nProbe)
-      .select("q_id", "q_v", "list_id")
+  /** A driver-held centroid table (list_id, centroid) as the probe
+    * kernel's literal — collected here, which launches no job when
+    * the table is already local ([[graft.sources.VersionedTable.readLatestLocal]]);
+    * list ids keep their type and sort ascending, nulls first. */
+  def centroidBook(cents: DataFrame): graft.plans.CentroidBook = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    val idType = cents.schema("list_id").dataType
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
+    val rows = cents.select("list_id", "centroid").collect()
+      .map(r => (CatalystTypeConverters.convertToCatalyst(r.get(0)),
+        r.getSeq[Double](1).toArray))
+      .sortWith { case ((a, _), (b, _)) =>
+        if (a == null) b != null else b != null && ord.lt(a, b) }
+    new graft.plans.CentroidBook(rows.map(_._1), idType, rows.map(_._2),
+      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
   }
+
+  /** Map-side probe: each query (id, v) paired with its `nProbe`
+    * nearest lists — (q_id, q_v, list_id) — ranked by `cosine4`
+    * descending, ties to the smaller list_id, computed per row by
+    * the native [[graft.plans.NearestLists]] kernel against the
+    * driver-held centroids. No join, no window, no shuffle: append
+    * assigns with nProbe = 1, search probes with its nProbe. */
+  def probe(queries: DataFrame, cents: graft.plans.CentroidBook,
+      nProbe: Int): DataFrame =
+    queries.select(col("id").as("q_id"), col("v").as("q_v"),
+      explode(graft.plans.VectorExpr.nearestLists(col("v"), cents, nProbe))
+        .as("list_id"))
+
+  /** Manifest-listed segment trees only: the `root/seg=<N>` paths
+    * under `basePath`, read with the base table's schema, so file
+    * listing covers the live segments and never the superseded trees
+    * compaction leaves on disk (the SegmentedBm25.readSegs fix). */
+  private[similarity] def readSegments(spark: org.apache.spark.sql.SparkSession,
+      root: String, segs: Seq[Long],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.option("basePath", root).schema(schema)
+      .parquet(segs.map(s => s"$root/seg=$s"): _*)
 
   /** Persist an IVF index: centroids and list assignments land as two
     * versioned tables behind atomic latest-pointers — build once,
@@ -109,7 +138,7 @@ object Ivf {
     val cents = centroidsQuantized(data, listKey, vecCol, centroidScale)
     val lists = data.select(col("id"), col(vecCol).as("v"),
       col(listKey).as("list_id"))
-    val cv = graft.sources.VersionedTable.write(cents, s"$dir/centroids")
+    val cv = graft.sources.VersionedTable.writeLocal(cents, s"$dir/centroids")
     val lv = graft.sources.VersionedTable.writePartitioned(lists,
       s"$dir/lists", "list_id")
     (cv, lv)
@@ -151,22 +180,14 @@ object Ivf {
       case None => ()
     }
     // centroid/manifest reads on this path use the per-version LOCAL
-    // cache (r19): both tables are metadata-class (bounded by the
-    // list-count knob / the maintain() cadence), immutable per
-    // version, and were paying a parquet scan job per execution
-    val cents = graft.sources.VersionedTable
-      .readLatestLocal(spark, s"$dir/centroids")
-    val scored = delta.select(col("id"), col("v")).crossJoin(broadcast(cents))
-      .select(col("id"), col("v"), col("list_id"),
-        Vectors.cosine4(col("v"), col("centroid")).as("c_cos"))
-    val w = Window.partitionBy("id").orderBy(col("c_cos").desc, col("list_id").asc)
-    val assigned = scored.withColumn("r", row_number().over(w))
-      .filter(col("r") === 1).select("id", "v", "list_id")
+    // cache: both tables are metadata-class (bounded by the list-count
+    // knob / the maintain() cadence) and immutable per version
+    val cents = centroidBook(graft.sources.VersionedTable
+      .readLatestLocal(spark, s"$dir/centroids"))
+    val assigned = probe(delta.select(col("id"), col("v")), cents, 1)
+      .select(col("q_id").as("id"), col("q_v").as("v"), col("list_id"))
     val manifestDir = s"$dir/segmanifest"
-    val prior: Seq[Long] = graft.sources.VersionedTable.latestVersion(manifestDir)
-      .map(_ => graft.sources.VersionedTable.readLatestLocal(spark, manifestDir)
-        .collect().map(_.getLong(0)).toSeq)
-      .getOrElse(Seq.empty)
+    val prior = manifestSegs(spark, manifestDir)
     // skip past orphan seg dirs from crashed appends too (mirrors
     // SegmentedBm25.listSegDirs): a crash between the segment write
     // and the manifest flip leaves segments/seg=N on disk with no
@@ -184,10 +205,19 @@ object Ivf {
     assigned.write.mode("errorifexists").partitionBy("list_id")
       .parquet(s"$dir/segments/seg=$segId")
     import spark.implicits._
-    graft.sources.VersionedTable.write(
+    graft.sources.VersionedTable.writeLocal(
       (prior :+ segId).toDF("seg_id"), manifestDir, tag)
     segId
   }
+
+  /** Segment ids listed by the serving manifest version — driver-held
+    * rows, no job once cached; empty before the first append. */
+  private[similarity] def manifestSegs(spark: org.apache.spark.sql.SparkSession,
+      manifestDir: String): Seq[Long] =
+    graft.sources.VersionedTable.latestVersion(manifestDir)
+      .map(_ => graft.sources.VersionedTable.localRows(spark, manifestDir)
+        .map(_.getLong(0)))
+      .getOrElse(Seq.empty)
 
   /** Compaction-cadence contract (same bound as
     * [[graft.operators.SegmentedBm25.maintain]]): call after every
@@ -198,12 +228,11 @@ object Ivf {
     * of how many micro-batches the index has absorbed. */
   def maintain(spark: org.apache.spark.sql.SparkSession, dir: String,
       maxSegments: Int = 8): Option[Long] = {
-    val manifestDir = s"$dir/segmanifest"
-    graft.sources.VersionedTable.latestVersion(manifestDir).flatMap { _ =>
-      val n = graft.sources.VersionedTable
-        .readLatestLocal(spark, manifestDir).count()
-      if (n > maxSegments) Some(compactSegments(spark, dir)) else None
-    }
+    // counted from the driver-held manifest rows: a count() on the
+    // local relation would still launch jobs
+    if (manifestSegs(spark, s"$dir/segmanifest").size > maxSegments)
+      Some(compactSegments(spark, dir))
+    else None
   }
 
   /** Fold appended segments into the base assignment table: one new
@@ -222,9 +251,7 @@ object Ivf {
     * the duplicate-serving window closes at recovery instead of
     * never. */
   def compactSegments(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    val segs = graft.sources.VersionedTable
-      .readLatestLocal(spark, s"$dir/segmanifest")
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val segs = manifestSegs(spark, s"$dir/segmanifest").sorted
     val tag = "compact:" + segs.mkString(",")
     val listsDir = s"$dir/lists"
     val lv = graft.sources.VersionedTable.taggedVersion(listsDir, tag) match {
@@ -238,7 +265,7 @@ object Ivf {
           listsDir, "list_id", Some(tag))
     }
     import spark.implicits._
-    graft.sources.VersionedTable.write(
+    graft.sources.VersionedTable.writeLocal(
       Seq.empty[Long].toDF("seg_id"), s"$dir/segmanifest")
     lv
   }
@@ -269,20 +296,11 @@ object Ivf {
   private def liveLists(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val base = graft.sources.VersionedTable.readLatest(spark, s"$dir/lists")
-    graft.sources.VersionedTable.latestVersion(s"$dir/segmanifest") match {
-      case None => base
-      case Some(_) =>
-        val folded = foldedSegIds(s"$dir/lists")
-        val segs = graft.sources.VersionedTable
-          .readLatestLocal(spark, s"$dir/segmanifest")
-          .collect().map(_.getLong(0)).toSeq
-          .filterNot(folded)
-        if (segs.isEmpty) base
-        else base.unionByName(
-          spark.read.parquet(s"$dir/segments")
-            .filter(col("seg").isin(segs: _*))
-            .select("id", "v", "list_id"))
-    }
+    val folded = foldedSegIds(s"$dir/lists")
+    val segs = manifestSegs(spark, s"$dir/segmanifest").filterNot(folded)
+    if (segs.isEmpty) base
+    else base.unionByName(readSegments(spark, s"$dir/segments", segs, base.schema)
+      .select("id", "v", "list_id"))
   }
 
   /** Search a persisted index: probe selection reads only the (tiny)
@@ -293,8 +311,9 @@ object Ivf {
     * PRUNES to the probed directories before reading a byte (the
     * whole point of building the index partitioned) — on the base
     * AND on any appended segment trees, which share the per-list
-    * layout. The probe frame is eagerly checkpointed: it is consumed
-    * by two executions (the id collect and the scoring join).
+    * layout. Probing is map-side ([[probe]]), so the id collect is one
+    * scan of the query batch and needs no checkpoint: the scoring join
+    * recomputes the same deterministic probes.
     *
     * `maxInFilterLists` is the join-route fallback for corpus-sized
     * query batches: once a batch probes more distinct lists than
@@ -308,15 +327,13 @@ object Ivf {
   def searchIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, k: Int, nProbe: Int,
       maxInFilterLists: Int = 1000): DataFrame = {
-    // per-version LOCAL centroid read (r19): bounded by the list
-    // count, immutable per version — no scan job per probe; the
-    // broadcast in probeLists builds from the local relation
-    val cents = graft.sources.VersionedTable
-      .readLatestLocal(spark, s"$dir/centroids")
+    // per-version LOCAL centroid read: bounded by the list count,
+    // immutable per version — no scan job per probe
+    val cents = centroidBook(graft.sources.VersionedTable
+      .readLatestLocal(spark, s"$dir/centroids"))
     val lists = liveLists(spark, dir)
-    val probes = probeLists(queries, cents, nProbe).localCheckpoint()
-    val probedIds = probes.select("list_id").distinct()
-      .collect().map(_.get(0))
+    val probes = probe(queries, cents, nProbe)
+    val probedIds = probedListIds(probes)
     val pruned =
       if (probedIds.length <= maxInFilterLists)
         lists.filter(col("list_id").isin(probedIds: _*))
@@ -328,6 +345,13 @@ object Ivf {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
       .select("q_id", "n_id", "cos", "rank")
   }
+
+  /** The distinct list ids a probe frame touches: |queries|·nProbe
+    * rows collected (the query batch is driver-bounded by contract —
+    * its ADC tables broadcast) and deduplicated on the driver, one
+    * job with no shuffle. */
+  private[similarity] def probedListIds(probes: DataFrame): Array[Any] =
+    probes.select("list_id").collect().map(_.get(0)).distinct
 
   /** Filtered IVF search — ANN under a metadata predicate, the
     * production "vector search with a WHERE clause" run through the
@@ -347,10 +371,8 @@ object Ivf {
   def searchFiltered(queries: DataFrame, data: DataFrame, listKey: String,
       keepCol: String, k: Int, nProbe: Int,
       centroidScale: Long = 0L): DataFrame = {
-    val cents =
-      if (centroidScale > 0) centroidsQuantized(data, listKey, "v", centroidScale)
-      else centroids(data, listKey, "v")
-    val probes = probeLists(queries, cents, nProbe)
+    val probes = probe(queries, centroidBook(listCentroids(data, listKey,
+      centroidScale)), nProbe)
     val lists = data.filter(col(keepCol))
       .select(col("id").as("n_id"), col("v").as("n_v"),
         col(listKey).as("list_id"))
@@ -365,13 +387,13 @@ object Ivf {
     * `data`: (id, v, <listKey>). With `centroidScale > 0` the list
     * centroids come from [[centroidsQuantized]] — deterministic
     * probes, which is what lets the s4 query be hash-checked against
-    * the DuckDB oracle; 0 keeps the float-avg centroids. */
+    * the DuckDB oracle; 0 keeps the float-avg centroids. The
+    * centroids (one row per list) are collected when the plan is
+    * built and probed map-side by [[probe]]. */
   def search(queries: DataFrame, data: DataFrame, listKey: String,
       k: Int, nProbe: Int, centroidScale: Long = 0L): DataFrame = {
-    val cents =
-      if (centroidScale > 0) centroidsQuantized(data, listKey, "v", centroidScale)
-      else centroids(data, listKey, "v")
-    val probes = probeLists(queries, cents, nProbe)
+    val probes = probe(queries, centroidBook(listCentroids(data, listKey,
+      centroidScale)), nProbe)
     val lists = data.select(col("id").as("n_id"), col("v").as("n_v"),
       col(listKey).as("list_id"))
     val scored = probes.join(lists, "list_id")
@@ -380,4 +402,9 @@ object Ivf {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
+
+  private def listCentroids(data: DataFrame, listKey: String,
+      centroidScale: Long): DataFrame =
+    if (centroidScale > 0) centroidsQuantized(data, listKey, "v", centroidScale)
+    else centroids(data, listKey, "v")
 }

@@ -15,11 +15,21 @@ import org.apache.spark.sql.expressions.Window
   * codebooks, ADC, refine sidecar); this object is only the
   * composition plus the persisted-index lifecycle.
   *
-  * Scale shape: a probe touches (a) the tiny centroid table, (b) the
-  * codes table pruned to the probed `list_id=` directories — a
-  * static IN filter from at most nProbe×|queries| driver-collected
-  * ids, so at 1000 lists a 2-probe query plan READS 0.2% of the code
-  * files — and (c) the shortlist's refine-sidecar rows. The
+  * Scale shape: the index metadata — centroids (one per list),
+  * codebook (≤ 256·m rows), integer centroids, segment manifest — is
+  * driver-held, written through [[graft.sources.VersionedTable.writeLocal]]
+  * and handed to per-row kernels as literals, never joined against
+  * corpus rows. Build reads the caller's plan once (one eager
+  * checkpoint); assignment (append: nearest list) and probing
+  * (search: nearest nProbe) are map-side
+  * ([[Ivf.probe]] / [[graft.plans.NearestLists]]); encode is a per-row
+  * projection ([[Pq.encode]] / [[graft.plans.PqEncode]]), so an append
+  * writes its codes and sidecar with no shuffle at all. A probe
+  * touches (a) the tiny centroid literal, (b) the codes table pruned
+  * to the probed `list_id=` directories — a static IN filter from at
+  * most nProbe×|queries| driver-collected ids, so at 1000 lists a
+  * 2-probe query plan READS 0.2% of the code files — and (c) the
+  * shortlist's refine-sidecar rows. The
   * per-(query, probed-list) distance tables are |q|·nProbe·m·|cb|
   * rows, broadcast by construction. Memory per corpus vector served:
   * m codes ≈ 8 bytes, the rung that makes 100 TB of embeddings
@@ -68,38 +78,38 @@ object Ivfpq {
       vecCol: String, dir: String, nCodes: Int = 32, iters: Int = 1,
       dsub: Int = 8, scale: Long = 10000L,
       centroidScale: Long = 1000000L, byResidual: Boolean = false): Unit = {
-    val cents = Ivf.centroidsQuantized(
-      corpus.select(col(idCol).as("id"), col(vecCol).as("v"), col(listKey)),
-      listKey, "v", centroidScale)
-    graft.sources.VersionedTable.write(cents, s"$dir/centroids")
-    if (!byResidual) {
-      val cb = Pq.fitCodebooks(corpus, idCol, vecCol, nCodes, dsub, scale, iters)
-        .localCheckpoint()
-      graft.sources.VersionedTable.write(cb, s"$dir/cb")
-      val codes = Pq.encode(corpus, cb, idCol, vecCol, dsub, scale)
-        .join(corpus.select(col(idCol).as("id"), col(listKey).as("list_id")), "id")
-      graft.sources.VersionedTable.writePartitioned(
-        codes.select("id", "sub", "code", "list_id"), s"$dir/codes", "list_id")
-    } else {
-      val w = corpus.select(col(idCol).as("id"),
-        col(listKey).as("list_id"), Pq.quantize(col(vecCol), scale).as("w"))
-      val icent = integerCentroids(w)
-      graft.sources.VersionedTable.write(icent, s"$dir/icent")
-      // EAGER checkpoint: the residual frame feeds the iterative
-      // codebook fit AND the encode — separate executions
-      val resid = residuals(w, icent).localCheckpoint()
-      val cb = Pq.fitCodebooks(resid, "id", "rv", nCodes, dsub, 1L, iters)
-        .localCheckpoint()
-      graft.sources.VersionedTable.write(cb, s"$dir/cb")
-      val codes = Pq.encode(resid, cb, "id", "rv", dsub, 1L)
-        .join(resid.select("id", "list_id"), "id")
-      graft.sources.VersionedTable.writePartitioned(
-        codes.select("id", "sub", "code", "list_id"), s"$dir/codes", "list_id")
-    }
+    // ONE materialization of the caller's plan: centroids, codebook
+    // seeds, every Lloyd step, the encode and the sidecar all read it
+    val in = corpus.select(col(idCol).as("id"), col(listKey).as("list_id"),
+      col(vecCol).as("v")).localCheckpoint()
+    graft.sources.VersionedTable.writeLocal(
+      Ivf.centroidsQuantized(in, "list_id", "v", centroidScale), s"$dir/centroids")
+    val w = in.select(col("id"), col("list_id"), Pq.quantize(col("v"), scale).as("w"))
+    // raw: PQ over the quantized vectors; residual: over w − c(list)
+    // against the integer centroids, already integer, so scale 1
+    val (pqIn, pqCol, pqScale) =
+      if (!byResidual) (in, "v", scale)
+      else {
+        graft.sources.VersionedTable.writeLocal(integerCentroids(w), s"$dir/icent")
+        (residuals(w, graft.sources.VersionedTable.localRows(in.sparkSession,
+          s"$dir/icent")), "rv", 1L)
+      }
+    val cb = Pq.fitCodebooks(pqIn, "id", pqCol, nCodes, dsub, pqScale, iters)
+    graft.sources.VersionedTable.writeLocal(cb, s"$dir/cb")
+    graft.sources.VersionedTable.writePartitioned(
+      byList(Pq.encode(pqIn, Pq.codebook(cb, dsub), "id", pqCol, pqScale, Seq("list_id"))
+        .select("id", "sub", "code", "list_id")), s"$dir/codes", "list_id")
     graft.sources.VersionedTable.write(
-      corpus.select(col(idCol).as("n_id"),
-        Pq.quantize(col(vecCol), scale).as("nw")), s"$dir/wvecs")
+      w.select(col("id").as("n_id"), col("w").as("nw")), s"$dir/wvecs")
   }
+
+  /** Code rows clustered by list for a base-table write: AQE's
+    * rebalance packs small lists into one file each and splits
+    * oversized ones, so the file count follows the data rather than
+    * the input's partitioning. (Appends skip it: a segment is written
+    * map-only, one file per list per input partition, until
+    * compaction folds it.) */
+  private def byList(codes: DataFrame): DataFrame = codes.hint("rebalance", col("list_id"))
 
   /** Per-list integer centroid of the quantized coordinates:
     * half-away-from-zero integer mean per dim ([[Pq.intRoundDiv]]),
@@ -115,11 +125,18 @@ object Ivfpq {
       .select(col("list_id"),
         transform(col("dc"), s => s.getField("cm")).as("c"))
 
-  /** (id, list_id, rv): exact integer residual vectors w − c(list). */
-  private def residuals(w: DataFrame, icent: DataFrame): DataFrame =
-    w.join(broadcast(icent), "list_id")
-      .select(col("id"), col("list_id"),
-        zip_with(col("w"), col("c"), (a, b) => a - b).as("rv"))
+  /** (id, list_id, rv): exact integer residual vectors w − c(list),
+    * the driver-held integer centroids (`icent` rows) looked up from a
+    * literal map — a per-row projection, no join. */
+  private def residuals(w: DataFrame, icent: Seq[org.apache.spark.sql.Row]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType, MapType}
+    val byList = Literal.create(icent.map(r => r.get(0) -> r.getSeq[Long](1)).toMap,
+      MapType(w.schema("list_id").dataType, ArrayType(LongType)))
+    w.select(col("id"), col("list_id"),
+      zip_with(col("w"), element_at(org.apache.spark.sql.GraftShims.column(byList),
+        col("list_id")), (a, b) => a - b).as("rv"))
+  }
 
   /** Append a batch of vectors WITHOUT retraining (FAISS's
     * add-after-train contract, composed: coarse-assign against the
@@ -150,38 +167,32 @@ object Ivfpq {
           .agg(max("seg_id")).head.getLong(0)
       case None => ()
     }
-    // metadata-class reads (centroids/cb/icent/manifest) use the
-    // per-version LOCAL cache (r19) — bounded by design knobs,
-    // immutable per version, previously one scan job each per call
-    val cents = graft.sources.VersionedTable
-      .readLatestLocal(spark, s"$dir/centroids")
-    val scored = delta
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(cents))
-      .select(col("id"), col("v"), col("list_id"),
-        graft.functions.Vectors.cosine4(col("v"), col("centroid")).as("c_cos"))
-    val w = Window.partitionBy("id").orderBy(col("c_cos").desc, col("list_id").asc)
-    val assigned = scored.withColumn("r", row_number().over(w))
-      .filter(col("r") === 1).select("id", "v", "list_id")
-      .localCheckpoint() // EAGER: feeds the codes write AND the sidecar write
-    val cb = graft.sources.VersionedTable.readLatestLocal(spark, s"$dir/cb")
+    // metadata-class reads (centroids/cb/icent/manifest) come from
+    // the per-version LOCAL cache — bounded by design knobs, immutable
+    // per version, and already seeded when this JVM wrote them
+    val cents = Ivf.centroidBook(graft.sources.VersionedTable
+      .readLatestLocal(spark, s"$dir/centroids"))
+    val book = Pq.codebook(graft.sources.VersionedTable
+      .readLatestLocal(spark, s"$dir/cb"), dsub)
+    // EAGER: the caller's plan and the map-side assignment feed the
+    // codes write AND the sidecar write; both then run map-only off
+    // this checkpoint
+    val assigned = Ivf.probe(delta.select(col(idCol).as("id"), col(vecCol).as("v")),
+        cents, 1)
+      .select(col("q_id").as("id"), col("list_id"), col("q_v").as("v"))
+      .localCheckpoint()
     // residual index (icent present): encode x − c(list) against the
     // frozen codebook, same contract as the raw path
     val codes =
-      (if (graft.sources.VersionedTable.latestVersion(s"$dir/icent").isEmpty)
-        Pq.encode(assigned.select("id", "v"), cb, "id", "v", dsub, scale)
+      if (graft.sources.VersionedTable.latestVersion(s"$dir/icent").isEmpty)
+        Pq.encode(assigned, book, "id", "v", scale, Seq("list_id"))
       else {
-        val icent = graft.sources.VersionedTable
-          .readLatestLocal(spark, s"$dir/icent")
         val wq = assigned.select(col("id"), col("list_id"),
           Pq.quantize(col("v"), scale).as("w"))
-        Pq.encode(residuals(wq, icent).select("id", "rv"), cb,
-          "id", "rv", dsub, 1L)
-      }).join(assigned.select("id", "list_id"), "id")
-    val prior: Seq[Long] = graft.sources.VersionedTable.latestVersion(manifestDir)
-      .map(_ => graft.sources.VersionedTable.readLatestLocal(spark, manifestDir)
-        .collect().map(_.getLong(0)).toSeq)
-      .getOrElse(Seq.empty)
+        Pq.encode(residuals(wq, graft.sources.VersionedTable.localRows(spark,
+          s"$dir/icent")), book, "id", "rv", 1L, Seq("list_id"))
+      }
+    val prior = Ivf.manifestSegs(spark, manifestDir)
     // skip past orphan seg dirs from crashed appends (the Ivf lesson:
     // deriving segId from the manifest alone recomputes the same id
     // and dies forever on errorifexists, wedging the stream's replay)
@@ -199,7 +210,7 @@ object Ivfpq {
     assigned.select(col("id").as("n_id"), Pq.quantize(col("v"), scale).as("nw"))
       .write.mode("errorifexists").parquet(s"$dir/wsegments/seg=$segId")
     import spark.implicits._
-    graft.sources.VersionedTable.write(
+    graft.sources.VersionedTable.writeLocal(
       (prior :+ segId).toDF("seg_id"), manifestDir, tag)
     segId
   }
@@ -210,12 +221,11 @@ object Ivfpq {
     * unions O(maxSegments) forever. */
   def maintain(spark: SparkSession, dir: String,
       maxSegments: Int = 8): Option[Long] = {
-    val manifestDir = s"$dir/segmanifest"
-    graft.sources.VersionedTable.latestVersion(manifestDir).flatMap { _ =>
-      val n = graft.sources.VersionedTable
-        .readLatestLocal(spark, manifestDir).count()
-      if (n > maxSegments) Some(compactSegments(spark, dir)) else None
-    }
+    // counted from the driver-held manifest rows: a count() on the
+    // local relation would still launch jobs
+    if (Ivf.manifestSegs(spark, s"$dir/segmanifest").size > maxSegments)
+      Some(compactSegments(spark, dir))
+    else None
   }
 
   /** Fold appended code/sidecar segments into the base versioned
@@ -236,9 +246,7 @@ object Ivfpq {
     * retry whose manifest gained an out-of-band append since the
     * crashed fold, both read exactly base ∪ unfolded segments. */
   def compactSegments(spark: SparkSession, dir: String): Long = {
-    val segs = graft.sources.VersionedTable
-      .readLatestLocal(spark, s"$dir/segmanifest")
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val segs = Ivf.manifestSegs(spark, s"$dir/segmanifest").sorted
     val tag = "compact:" + segs.mkString(",")
     def foldOnce(tableDir: String, fold: => Long): Long =
       graft.sources.VersionedTable.taggedVersion(tableDir, tag) match {
@@ -250,52 +258,47 @@ object Ivfpq {
       }
     val cv = foldOnce(s"$dir/codes",
       graft.sources.VersionedTable.writePartitioned(
-        liveCodes(spark, dir).select("id", "sub", "code", "list_id"),
+        byList(liveCodes(spark, dir).select("id", "sub", "code", "list_id")),
         s"$dir/codes", "list_id", Some(tag)))
     foldOnce(s"$dir/wvecs",
       graft.sources.VersionedTable.write(
-        liveWvecs(spark, dir).select("n_id", "nw"), s"$dir/wvecs", Some(tag)))
+        liveWvecs(spark, dir).select("n_id", "nw").hint("rebalance"),
+        s"$dir/wvecs", Some(tag)))
     import spark.implicits._
-    graft.sources.VersionedTable.write(
+    graft.sources.VersionedTable.writeLocal(
       Seq.empty[Long].toDF("seg_id"), s"$dir/segmanifest")
     cv
   }
 
-  private def liveSegs(spark: SparkSession, dir: String): Seq[Long] =
-    graft.sources.VersionedTable.latestVersion(s"$dir/segmanifest") match {
-      case None => Seq.empty
-      case Some(_) => graft.sources.VersionedTable
-        .readLatestLocal(spark, s"$dir/segmanifest")
-        .collect().map(_.getLong(0)).toSeq
-    }
+  /** Base codes ∪ the manifest-listed segments not already folded
+    * into the serving base version ([[Ivf.foldedSegIds]]), read by
+    * their own `seg=<N>` paths ([[Ivf.readSegments]]). */
+  private def liveCodes(spark: SparkSession, dir: String): DataFrame =
+    live(spark, dir, "codes", "segments", Seq("id", "sub", "code", "list_id"))
 
-  private def liveCodes(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.sources.VersionedTable.readLatest(spark, s"$dir/codes")
-    val segs = liveSegs(spark, dir).filterNot(Ivf.foldedSegIds(s"$dir/codes"))
-    if (segs.isEmpty) base
-    else base.unionByName(spark.read.parquet(s"$dir/segments")
-      .filter(col("seg").isin(segs: _*))
-      .select("id", "sub", "code", "list_id"))
-  }
+  private def liveWvecs(spark: SparkSession, dir: String): DataFrame =
+    live(spark, dir, "wvecs", "wsegments", Seq("n_id", "nw"))
 
-  private def liveWvecs(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.sources.VersionedTable.readLatest(spark, s"$dir/wvecs")
-    val segs = liveSegs(spark, dir).filterNot(Ivf.foldedSegIds(s"$dir/wvecs"))
+  private def live(spark: SparkSession, dir: String, table: String,
+      segRoot: String, cols: Seq[String]): DataFrame = {
+    val base = graft.sources.VersionedTable.readLatest(spark, s"$dir/$table")
+    val segs = Ivf.manifestSegs(spark, s"$dir/segmanifest")
+      .filterNot(Ivf.foldedSegIds(s"$dir/$table"))
     if (segs.isEmpty) base
-    else base.unionByName(spark.read.parquet(s"$dir/wsegments")
-      .filter(col("seg").isin(segs: _*))
-      .select("n_id", "nw"))
+    else base.unionByName(
+      Ivf.readSegments(spark, s"$dir/$segRoot", segs, base.schema).select(cols.map(col): _*))
   }
 
   /** Probe a persisted index: coarse probe against the stored
     * centroids, ADC over the probed lists' codes only (static
     * partition filter — on the base AND any appended segment trees,
     * which share the per-list layout), exact refine of the
-    * top-`rerank` shortlist against the stored sidecar. The probe
-    * frame is EAGERLY checkpointed — it feeds two executions (the
-    * probed-id collect and the ADC join). The probed-id collect is
-    * DISTINCT list ids — bounded by the list count, not the query
-    * batch — and `maxInFilterLists` is the join-route fallback for
+    * top-`rerank` shortlist against the stored sidecar. Probing is
+    * map-side ([[Ivf.probe]]), so the probed-id collect is one scan
+    * of the query batch and the ADC join recomputes the same
+    * deterministic probes — no checkpoint. The probed ids are
+    * deduplicated on the driver — bounded by the list count, not the
+    * query batch — and `maxInFilterLists` is the join-route fallback for
     * corpus-sized batches (the [[Ivf.searchIndex]] contract): past
     * the threshold the static IN filter is dropped and the inner ADC
     * join on (list_id, sub, code) restricts rows instead. */
@@ -303,16 +306,14 @@ object Ivfpq {
       idCol: String, vecCol: String, k: Int, nProbe: Int = 2,
       rerank: Int = 0, dsub: Int = 8, scale: Long = 10000L,
       maxInFilterLists: Int = 1000): DataFrame = {
-    // per-version LOCAL metadata reads (r19): centroids/cb/icent are
+    // per-version LOCAL metadata reads: centroids/cb/icent are
     // bounded by design knobs (nLists, 256·m codebook rows) and
-    // immutable per version — each was a parquet scan job per probe
-    val cents = graft.sources.VersionedTable
-      .readLatestLocal(spark, s"$dir/centroids")
-    val probes = Ivf.probeLists(
+    // immutable per version — no scan job per probe
+    val probes = Ivf.probe(
       queries.select(col(idCol).as("id"), col(vecCol).as("v")),
-      cents, nProbe).localCheckpoint()
-    val probedIds = probes.select("list_id").distinct()
-      .collect().map(_.get(0))
+      Ivf.centroidBook(graft.sources.VersionedTable
+        .readLatestLocal(spark, s"$dir/centroids")), nProbe)
+    val probedIds = Ivf.probedListIds(probes)
     val cb = graft.sources.VersionedTable.readLatestLocal(spark, s"$dir/cb")
     // per-(query, probed-list) distance tables: |q|·nProbe·m·|cb|
     // rows, broadcast-by-contract. Raw indexes share one table per
@@ -325,15 +326,10 @@ object Ivfpq {
           .select(col("id").as("q_id"), col("sub"), col("code"), col("d2"))
         qd.join(probes.select("q_id", "list_id"), "q_id")
       } else {
-        val icent = graft.sources.VersionedTable
-          .readLatestLocal(spark, s"$dir/icent")
-        val qw = queries.select(col(idCol).as("id"),
-          Pq.quantize(col(vecCol), scale).as("w"))
-        val qr = probes.select(col("q_id").as("id"), col("list_id"))
-          .join(qw, "id")
-          .join(broadcast(icent), "list_id")
-          .select(col("id").as("q_id"), col("list_id"),
-            zip_with(col("w"), col("c"), (a, b) => a - b).as("rv"))
+        val qr = residuals(probes.select(col("q_id").as("id"), col("list_id"),
+            Pq.quantize(col("q_v"), scale).as("w")),
+          graft.sources.VersionedTable.localRows(spark, s"$dir/icent"))
+          .select(col("id").as("q_id"), col("list_id"), col("rv"))
         qr.select(col("q_id"), col("list_id"),
             posexplode(transform(
               sequence(lit(0), (size(col("rv")) / dsub).cast("int") - 1),

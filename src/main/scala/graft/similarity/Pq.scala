@@ -28,11 +28,14 @@ import org.apache.spark.sql.expressions.Window
   * sums, so assignment, distance tables, and ADC totals are
   * order-independent under any partitioning.
   *
-  * Scale shape: codebook construction is one (code, dim) shuffle over
-  * exploded coordinates (the s4 centroid shape); encoding fans each
-  * vector out to |codebook| rows per coordinate map-side against the
-  * BROADCAST codebook and reduces by (id, sub) — linear in corpus,
-  * constant per-vector work; ADC broadcasts the per-query distance
+  * Scale shape: the codebook (≤ 256·m sub-vectors) is driver-held —
+  * trained as point seeds plus Lloyd steps whose results are
+  * collected, each step one map pass and one (code, dim) shuffle of
+  * partial sums — and it reaches the corpus as the constructor
+  * literal of the native [[graft.plans.PqEncode]] kernel, so encoding
+  * is a per-row projection: one vector in, its m codes out, no
+  * fan-out against the codebook and no shuffle, linear in corpus with
+  * constant per-vector work. ADC broadcasts the per-query distance
   * tables (|q|·m·|codebook| rows — driver-bounded by contract) and
   * scans the code table once.
   */
@@ -57,49 +60,75 @@ object Pq {
     * initial centroids (k-means' random-points init made
     * deterministic; means-of-random-subsets would all collapse onto
     * the global mean and leave nothing for Lloyd to spread).
-    * Exploded as (code, dim, sub, cm) for the distance joins; dims
+    * Returned driver-held, exploded as (code, dim, sub, cm); dims
     * 0-based, `sub = dim DIV dsub`. */
   def seedCodebooks(data: DataFrame, idCol: String, vecCol: String,
-      nCodes: Int, dsub: Int, scale: Long): DataFrame = {
-    val seeds = data.groupBy(pmod(col(idCol), lit(nCodes.toLong)).as("code"))
-      .agg(min(col(idCol)).as("__seed_id"))
-    data.join(broadcast(seeds), col(idCol) === col("__seed_id"))
-      .select(col("code").cast("int").as("code"),
-        posexplode(quantize(col(vecCol), scale)).as(Seq("dim", "w")))
+      nCodes: Int, dsub: Int, scale: Long): DataFrame =
+    local(data.groupBy(pmod(col(idCol), lit(nCodes.toLong)).cast("int").as("code"))
+      .agg(min_by(quantize(col(vecCol), scale), col(idCol)).as("w"))
+      .select(col("code"), posexplode(col("w")).as(Seq("dim", "cm")))
       .select(col("code"), col("dim"),
-        expr(s"dim DIV $dsub").cast("int").as("sub"), col("w").as("cm"))
-  }
+        expr(s"dim DIV $dsub").cast("int").as("sub"), col("cm")))
 
   /** One integer-exact Lloyd step per subspace: re-assign every
-    * sub-vector to its nearest current centroid (exact BIGINT
-    * distances, ties to the smaller code), then integer-rounded means
-    * per (code, dim). Clusters that lose every member drop out
-    * (deterministically — no random re-seeding). Each step is one
-    * broadcast fanout plus one (code, dim) shuffle — the
-    * [[Ivf.lloydStep]] cost shape, per subspace. */
-  def refineStep(data: DataFrame, cb: DataFrame, idCol: String,
-      vecCol: String, dsub: Int, scale: Long): DataFrame = {
-    val assigned = encode(data, cb, idCol, vecCol, dsub, scale)
-    data.select(col(idCol).as("id"),
-        posexplode(quantize(col(vecCol), scale)).as(Seq("dim", "w")))
-      .withColumn("sub", expr(s"dim DIV $dsub").cast("int"))
-      .join(assigned, Seq("id", "sub"))
+    * sub-vector to its nearest current centroid (the native
+    * [[codes]] kernel — exact BIGINT distances, ties to the smaller
+    * code), then integer-rounded means per (code, dim). Clusters that
+    * lose every member drop out (deterministically — no random
+    * re-seeding). Each step is one map pass plus one (code, dim)
+    * shuffle of partial sums; the result is driver-held. */
+  def refineStep(data: DataFrame, book: graft.plans.PqBook, vecCol: String,
+      scale: Long): DataFrame = {
+    val dsub = book.dsub
+    // codes projected to a column BEFORE the explode, so they are
+    // computed once per vector, not once per coordinate
+    local(data.select(quantize(col(vecCol), scale).as("w"))
+      .select(col("w"), codes(col("w"), book).as("c"))
+      .select(posexplode(col("w")).as(Seq("dim", "x")), col("c"))
+      .select(get(col("c"), expr(s"dim DIV $dsub").cast("int")).as("code"),
+        col("dim"), col("x"))
+      .filter(col("code").isNotNull)
       .groupBy("code", "dim")
-      .agg(sum("w").as("s"), count(lit(1)).as("n"))
+      .agg(sum("x").as("s"), count(lit(1)).as("n"))
       .select(col("code"), col("dim"),
-        expr(s"dim DIV $dsub").cast("int").as("sub"), intRoundDiv.as("cm"))
+        expr(s"dim DIV $dsub").cast("int").as("sub"), intRoundDiv.as("cm")))
   }
 
   /** Train the per-subspace codebooks: point seeds + `iters` Lloyd
-    * steps, all in the exact integer space. */
+    * steps, all in the exact integer space; driver-held. */
   def fitCodebooks(data: DataFrame, idCol: String, vecCol: String,
-      nCodes: Int, dsub: Int, scale: Long, iters: Int): DataFrame = {
-    var cb = seedCodebooks(data, idCol, vecCol, nCodes, dsub, scale)
-    (0 until iters).foreach { _ =>
-      cb = refineStep(data, cb.localCheckpoint(), idCol, vecCol, dsub, scale)
+      nCodes: Int, dsub: Int, scale: Long, iters: Int): DataFrame =
+    (0 until iters).foldLeft(seedCodebooks(data, idCol, vecCol, nCodes, dsub, scale)) {
+      (cb, _) => refineStep(data, codebook(cb, dsub), vecCol, scale)
     }
-    cb
+
+  /** A small frame collected into a driver-held local relation. */
+  private def local(df: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
   }
+
+  /** The exploded (code, dim, sub, cm) codebook as the native encode's
+    * literal: per sub, ascending codes and their dsub-long integer
+    * sub-vectors. Collects `cb` (no job when it is driver-held).
+    * Entries shorter than dsub — the ragged tail of a dimension dsub
+    * does not divide, which no vector encodes — are left out. */
+  def codebook(cb: DataFrame, dsub: Int): graft.plans.PqBook = {
+    val entries = cb.select("sub", "code", "dim", "cm").collect()
+      .groupBy(r => (r.getInt(0), r.getInt(1)))
+      .map { case (k, rs) => k -> rs.sortBy(_.getInt(2)).map(_.getLong(3)) }
+      .filter(_._2.length == dsub)
+    val bySub = entries.toSeq.groupBy(_._1._1)
+    val perSub = (0 until bySub.keys.maxOption.fold(0)(_ + 1)).map(s =>
+      bySub.getOrElse(s, Nil).map { case ((_, c), cv) => (c, cv) }.sortBy(_._1))
+    new graft.plans.PqBook(dsub, perSub.map(_.map(_._1).toArray).toArray,
+      perSub.map(_.map(_._2).toArray).toArray)
+  }
+
+  /** A quantized vector's PQ codes, one per subspace (native
+    * [[graft.plans.PqEncode]] against the driver-held codebook). */
+  def codes(w: Column, book: graft.plans.PqBook): Column =
+    graft.plans.VectorExpr.pqEncode(w, book)
 
   /** The exploded (code, dim, sub, cm) codebook reassembled as one
     * sub-vector array per (sub, code) — 256 rows at the default
@@ -120,12 +149,10 @@ object Pq {
         s => slice(quantize(col(vecCol), scale), s * dsub + 1, lit(dsub))))
         .as(Seq("sub", "sv")))
 
-  /** Exact per-(vector, subspace, codebook-entry) squared distances
-    * in the scaled-integer space: sub-vectors against the BROADCAST
-    * per-(sub, code) centroid sub-vectors, the distance computed
-    * in-row by a light integer zip_with/aggregate — the d2 itself
-    * never touches an exchange, where the coordinate-exploded
-    * (id, sub, code) reduction shuffled |vecs|·d·|codebook| rows.
+  /** Exact per-(query, subspace, codebook-entry) squared distances in
+    * the scaled-integer space — the ADC distance tables: sub-vectors
+    * against the BROADCAST per-(sub, code) centroid sub-vectors, the
+    * distance computed in-row by a light integer zip_with/aggregate.
     * Integer sums are order-independent, so the HOF accumulation is
     * bit-identical to any other order. */
   private[similarity] def subDistances(vecs: DataFrame, cb: DataFrame,
@@ -137,15 +164,15 @@ object Pq {
           (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)
           .as("d2"))
 
-  /** PQ codes: per (vector, subspace) the codebook entry minimizing
-    * the exact squared distance, ties to the smaller code (the
-    * lexicographic struct-min, stable cross-engine). */
-  def encode(corpus: DataFrame, cb: DataFrame, idCol: String,
-      vecCol: String, dsub: Int, scale: Long): DataFrame =
-    subDistances(corpus, cb, idCol, vecCol, dsub, scale)
-      .groupBy("id", "sub")
-      .agg(min(struct(col("d2"), col("code"))).as("mc"))
-      .select(col("id"), col("sub"), col("mc.code").as("code"))
+  /** PQ codes as (id, sub, code) rows: per (vector, subspace) the
+    * codebook entry minimizing the exact squared distance, ties to
+    * the smaller code — one row in, m rows out, map-side. `carry`
+    * columns ride along unchanged. */
+  def encode(corpus: DataFrame, book: graft.plans.PqBook, idCol: String,
+      vecCol: String, scale: Long, carry: Seq[String] = Nil): DataFrame =
+    corpus.select((col(idCol).as("id") +: carry.map(col)) :+
+        posexplode(codes(quantize(col(vecCol), scale), book)).as(Seq("sub", "code")): _*)
+      .filter(col("code").isNotNull)
 
   /** ADC top-k: per-query distance tables over the SAME codebook,
     * joined to the corpus codes on (sub, code), summed per pair —
@@ -164,11 +191,10 @@ object Pq {
       iters: Int = 1, dsub: Int = 8, scale: Long = 10000L,
       rerank: Int = 0): DataFrame = {
     val cb = fitCodebooks(corpus, idCol, vecCol, nCodes, dsub, scale, iters)
-      .localCheckpoint() // reused by encode AND the query tables
-    val codes = encode(corpus, cb, idCol, vecCol, dsub, scale)
+    val coded = encode(corpus, codebook(cb, dsub), idCol, vecCol, scale)
     val qd = subDistances(queries, cb, idCol, vecCol, dsub, scale)
       .select(col("id").as("q_id"), col("sub"), col("code"), col("d2"))
-    val adc = codes.select(col("id").as("n_id"), col("sub"), col("code"))
+    val adc = coded.select(col("id").as("n_id"), col("sub"), col("code"))
       .join(broadcast(qd), Seq("sub", "code"))
       .groupBy("q_id", "n_id")
       .agg(sum("d2").as("adist"))
@@ -216,14 +242,16 @@ object Pq {
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nCodes: Int = 32, iters: Int = 1, dsub: Int = 8,
       scale: Long = 10000L): Unit = {
-    val cb = fitCodebooks(corpus, idCol, vecCol, nCodes, dsub, scale, iters)
+    // the caller's plan runs once: every pass below reads this
+    val in = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
       .localCheckpoint()
-    graft.sources.VersionedTable.write(cb, s"$dir/cb")
+    val cb = fitCodebooks(in, "id", "v", nCodes, dsub, scale, iters)
+    graft.sources.VersionedTable.writeLocal(cb, s"$dir/cb")
     graft.sources.VersionedTable.write(
-      encode(corpus, cb, idCol, vecCol, dsub, scale), s"$dir/codes")
+      encode(in, codebook(cb, dsub), "id", "v", scale), s"$dir/codes")
     graft.sources.VersionedTable.write(
-      corpus.select(col(idCol).as("n_id"),
-        quantize(col(vecCol), scale).as("nw")), s"$dir/wvecs")
+      in.select(col("id").as("n_id"), quantize(col("v"), scale).as("nw")),
+      s"$dir/wvecs")
   }
 
   /** Probe a persisted index: per-query distance tables against the

@@ -54,7 +54,7 @@ class IvfIndexSpec extends AnyFunSuite {
       .filter(col("r") === 1).select("id", "v", "list_id")
     val all = base.select(col("id"), col("v"), col("label").as("list_id"))
       .unionByName(deltaAssigned).localCheckpoint(true)
-    val probes = Ivf.probeLists(queries, cents, nProbe = 2)
+    val probes = RelationalAnn.probeLists(queries, cents, nProbe = 2)
     val expected = probes.join(
         all.select(col("id").as("n_id"), col("v").as("n_v"), col("list_id")),
         "list_id")

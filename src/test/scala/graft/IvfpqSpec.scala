@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Vectors
-import graft.similarity.{Ivf, Ivfpq, Pq}
+import graft.similarity.{Ivfpq, Pq}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,7 +32,7 @@ class IvfpqSpec extends AnyFunSuite {
       s"expected a partition filter on list_id in:\n$plan")
 
     val cents = graft.sources.VersionedTable.readLatest(spark, s"$dir/centroids")
-    val probed = Ivf.probeLists(queries, cents, nProbe = 2)
+    val probed = RelationalAnn.probeLists(queries, cents, nProbe = 2)
       .select("q_id", "list_id").collect()
       .map(r => (r.getLong(0), r.get(1))).toSet
     val labels = corpus.select(col("id"), col("label")).collect()
@@ -70,7 +70,7 @@ class IvfpqSpec extends AnyFunSuite {
     val wvecs = VersionedTable.readLatest(spark, s"$dir/wvecs").collect()
       .map(r => r.getAs[Number]("n_id").longValue() -> r.getSeq[Long](1)).toMap
     val cents = VersionedTable.readLatest(spark, s"$dir/centroids")
-    val probed = Ivf.probeLists(queries, cents, nProbe = 2)
+    val probed = RelationalAnn.probeLists(queries, cents, nProbe = 2)
       .select("q_id", "list_id").collect()
       .map(r => (r.getLong(0), r.get(1)))
       .groupBy(_._1).map { case (q, ps) => q -> ps.map(_._2).toSet }

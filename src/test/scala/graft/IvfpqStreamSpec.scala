@@ -27,7 +27,7 @@ class IvfpqStreamSpec extends AnyFunSuite {
     // the segment's codes must equal a fresh encode of the same
     // vectors against the STORED codebook (frozen-codebook contract)
     val cb = VersionedTable.readLatest(spark, s"$dir/cb")
-    val want = Pq.encode(delta, cb, "id", "v", dsub = 8, scale = 10000L)
+    val want = RelationalAnn.encode(delta, cb, "id", "v", dsub = 8, scale = 10000L)
       .collect().map(r => (r.getAs[Number]("id").longValue(),
         r.getAs[Number]("sub").intValue()) -> r.getAs[Number]("code").intValue())
       .toMap
@@ -86,7 +86,7 @@ class IvfpqStreamSpec extends AnyFunSuite {
     // centroid subtracted, then nearest codebook entry per subspace
     import graft.sources.VersionedTable
     val cents = VersionedTable.readLatest(spark, s"$dir/centroids")
-    val assigned = graft.similarity.Ivf.probeLists(delta, cents, nProbe = 1)
+    val assigned = RelationalAnn.probeLists(delta, cents, nProbe = 1)
       .select("q_id", "list_id").collect()
       .map(r => r.getLong(0) -> r.get(1)).toMap
     val icent = VersionedTable.readLatest(spark, s"$dir/icent").collect()

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   never allowed.
   * - BroadcastNestedLoopJoin is allowed ONLY where a provably tiny
   *   side broadcasts by design: s1 broadcasts the query set against
-  *   the map-only corpus scan, s4 broadcasts the centroid table.
+  *   the map-only corpus scan. IVF probes (s4/s11/s12/s14) need none:
+  *   the centroids are a literal of the map-side probe kernel.
   *   Anything else appearing here means a join lost its equi-key.
   * - Exchange SinglePartition is allowed ONLY on tiny-final-result
   *   reductions (global profile/funnel rollups, a 1-row filter
@@ -26,10 +27,6 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private val allowNestedLoop = Set(
     "s1_knn_brute",    // broadcast(query side) × corpus scan, per-partition top-k
-    "s4_knn_ivf",      // broadcast(centroids) × query/corpus assignment
-    "s14_filtered_ivf",// the same broadcast(centroids) probe shape;
-                       // the filtered list scan itself stays an
-                       // equi-join on list_id
     "g3_hits",         // broadcast(one-row phase total) for the
                        // integer HITS normalization; the edge
                        // passes stay keyed equi-joins
@@ -38,13 +35,8 @@ class PlanAuditSpec extends AnyFunSuite {
                        // one-job rerank rewrite there is no checkpoint truncating
                        // the lineage, so the candidate stage's by-design NLJ
                        // shows in s7's (single) plan
-    "s8_recall",       // composes s1's broadcast bruteForce (truth side) and
-                       // s4's broadcast-centroid assignment — both by design
+    "s8_recall",       // composes s1's broadcast bruteForce (truth side)
     "s9_recall_sweep", // s8's shape swept over three probe levels
-    "s11_ivfpq",       // s4's broadcast-centroid probe assignment
-                       // feeds the coarse stage (the ADC joins are
-                       // all equi-joins)
-    "s12_ivfpq_residual", // same coarse probe assignment
     "x19_mlt")         // the 1-row derived-df-cap frame broadcast
                        // over the df table (a constant equi-key
                        // would be constant-folded away)

@@ -38,7 +38,7 @@ class PqSpec extends AnyFunSuite {
       .map(r => (r.getAs[Number]("code").intValue(),
         r.getAs[Number]("dim").intValue()) -> r.getAs[Number]("cm").longValue())
       .toMap
-    val codes = Pq.encode(corpus, cbDf, "id", "v", dsub, scale).collect()
+    val codes = Pq.encode(corpus, Pq.codebook(cbDf, dsub), "id", "v", scale).collect()
       .map(r => (r.getAs[Number]("id").longValue(),
         r.getAs[Number]("sub").intValue()) -> r.getAs[Number]("code").intValue())
       .toMap
