@@ -43,13 +43,18 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
+  /** BM25's tokenisation: lower-cased, space-trimmed, split on
+    * whitespace. */
+  private[operators] def tokens(text: Column): Column =
+    split(trim(lower(text)), "\\s+")
+
   /** Corpus term frequencies: (doc_id, tok, tf, dl) with dl = total
     * token count of the document (BM25's length normalizer). dl is
     * computed MAP-SIDE from the token array and carried through the
     * groupBy key (constant per doc, so the key extension is free) —
     * no per-doc re-aggregation, no dl self-join, one shuffle total. */
   def termFrequencies(corpus: DataFrame, idCol: Column, textCol: Column): DataFrame =
-    corpus.select(idCol.as("doc_id"), split(trim(lower(textCol)), "\\s+").as("tks"))
+    corpus.select(idCol.as("doc_id"), tokens(textCol).as("tks"))
       .select(col("doc_id"), size(col("tks")).cast("long").as("dl"),
         explode(col("tks")).as("tok"))
       .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).as("tf"))
@@ -57,7 +62,7 @@ object Retrieval {
   /** Per-query distinct token sets: (q_id, tok). */
   private[operators] def queryTerms(queries: DataFrame, idCol: String, textCol: String): DataFrame =
     queries.select(col(idCol).as("q_id"),
-      explode(array_distinct(split(trim(lower(col(textCol))), "\\s+"))).as("tok"))
+      explode(array_distinct(tokens(col(textCol)))).as("tok"))
 
   /** Shared scoring core over a term-frequency relation (in-line or
     * persisted — any frame with doc_id/tok/tf/dl columns).

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.{FingerprintCache, VersionedTable}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,34 +14,54 @@ import org.apache.spark.sql.types._
   *
   * Layout under `indexDir`:
   *  - `segdata/seg=<N>/tok_bucket=<b>/` — per-segment postings
-  *    (doc_id, tok, tf, dl), append-only, bucket-partitioned like
+  *    (doc_id, dl, tok, tf), append-only, bucket-partitioned like
   *    the [[Retrieval.buildIndex]] table so query-term pruning works
   *    per segment.
-  *  - `docmeta/seg=<N>/doc_bucket=<b>/` — per-segment (doc_id, dl)
-  *    sidecar, hash-bucketed by doc id: the probe that finds a
-  *    re-ingested doc's PREVIOUS length reads only the batch's doc
-  *    buckets — never a corpus scan.
-  *  - `manifest/` — a [[VersionedTable]] whose single atomic pointer
-  *    makes every append all-or-nothing for readers: one `seg` row
-  *    per live segment (with its exact doc-count/length stats) and
-  *    one `tomb` row per superseded document copy
-  *    (doc_id, before_seg, dl) — postings of `doc_id` in segments
+  *  - `docmeta/seg=<N>/` — per-segment (doc_id, dl) sidecar, one
+  *    unpartitioned write derived from the batch with the postings'
+  *    tokenisation (a null text has no postings and no entry). The
+  *    replacement probe joins the batch's ids against every live
+  *    prior sidecar: hash buckets by doc id would not prune it, since
+  *    a batch of n ≥ 265 ids leaves fewer than one of 64 buckets empty
+  *    in expectation.
+  *  - `manifest/` — a driver-held [[VersionedTable]] (written with
+  *    `writeLocal`, read with `localRows`) whose single atomic pointer
+  *    makes every append all-or-nothing for readers: one `seg` row per
+  *    live segment (with its exact doc-count/length stats, observed on
+  *    the sidecar write) and one `tomb` row per superseded document
+  *    copy (doc_id, before_seg, dl) — postings of `doc_id` in segments
   *    `< before_seg` are dead. A crash between the segment write and
-  *    the manifest flip leaves an orphan directory the manifest
-  *    never references (and the next seg id skips past it).
+  *    the manifest flip leaves an orphan directory the manifest never
+  *    references (and the next seg id skips past it).
   *
-  * Search reads only manifest-listed segments, prunes to query-term
-  * buckets, anti-joins the tombstones (equi-keyed on doc_id), and
-  * corrects global stats from the manifest's own exact
-  * per-segment/per-tomb numbers — no full-corpus aggregation on any
-  * query path. [[compact]] folds live postings into one fresh
-  * segment and drops all tombstones (Solr's merge), bounding both
-  * the segment count and the tombstone anti-join side.
+  * Segment reads declare their schema, so Spark runs no parquet
+  * schema-inference job. Search reads only the manifest-listed
+  * segments' `tok_bucket` leaf directories of the query terms (no
+  * parallel listing job while there are at most 32 of them), keeps
+  * the `tok_bucket IN (…)` partition filter, anti-joins the
+  * tombstones (equi-keyed on doc_id) and takes nDocs/avgdl from the
+  * manifest's per-segment/per-tomb numbers on the driver — no
+  * aggregation over the corpus or the manifest on any query path.
+  * [[compact]] folds live postings into one fresh segment and drops
+  * all tombstones (Solr's merge), bounding both the segment count and
+  * the tombstone anti-join side.
+  *
+  * Scale shape: an append costs one postings aggregate, one sidecar
+  * distinct and, once the index has segments, one probe join of the
+  * batch ids against the live sidecars (O(live docs) scan, O(batch)
+  * result). The manifest is O(live segments + tombstones since the
+  * last compact) rows under the [[maintain]] cadence and must stay
+  * within [[VersionedTable.MetadataRows]]; a single batch replacing
+  * more documents than that needs a compact in between.
   *
   * Ids are long (cast upstream; dictionary-encode string ids first).
   */
 object SegmentedBm25 {
 
+  /** Doc-hash bucket count of the earlier `docmeta/seg=<N>/doc_bucket=<b>/`
+    * sidecar layout, which segments no longer write. An index written
+    * in that layout takes one [[compact]] before its next append:
+    * compact reads postings only and writes the new sidecar. */
   val DocBuckets = 64
 
   private def manifestDir(indexDir: String) = s"$indexDir/manifest"
@@ -58,10 +78,55 @@ object SegmentedBm25 {
     StructField("before_seg", LongType),
     StructField("dl", LongType)))
 
+  // declared read schemas, partition columns last
+  private val postingsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("dl", LongType),
+    StructField("tok", StringType), StructField("tf", LongType),
+    StructField("seg", LongType), StructField("tok_bucket", LongType)))
+  private val docMetaSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("dl", LongType),
+    StructField("seg", LongType)))
+
   private def tokBucket(nBuckets: Int) =
     pmod(xxhash64(col("tok")), lit(nBuckets.toLong))
-  private def docBucket =
-    pmod(xxhash64(col("doc_id")), lit(DocBuckets.toLong))
+
+  /** The serving manifest, split on the driver. */
+  private final case class Manifest(rows: Seq[Row]) {
+    val segs: Seq[Row] = rows.filter(_.getString(0) == "seg")
+    val tombs: Seq[Row] = rows.filter(_.getString(0) == "tomb")
+    def segIds: Seq[Long] = segs.map(_.getLong(1))
+    def nDocs: Long = segs.map(_.getLong(2)).sum - tombs.size
+    def totalLen: Long = segs.map(_.getLong(3)).sum - tombs.map(_.getLong(7)).sum
+    def bucketCounts: Seq[Int] = segs.map(_.getInt(4)).distinct
+
+    /** (t_doc, before_seg) as a local relation for the anti-joins. */
+    def tombFrame(spark: SparkSession): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(
+        tombs.map(r => Row(r.getLong(5), r.getLong(6))).asJava,
+        StructType(Seq(StructField("t_doc", LongType),
+          StructField("before_seg", LongType))))
+    }
+  }
+
+  private def readManifest(spark: SparkSession, indexDir: String): Option[Manifest] =
+    VersionedTable.latestVersion(manifestDir(indexDir))
+      .map(_ => Manifest(VersionedTable.localRows(spark, manifestDir(indexDir))))
+
+  private def servingManifest(spark: SparkSession, indexDir: String): Manifest =
+    readManifest(spark, indexDir).getOrElse(
+      throw new IllegalStateException(s"no segmented index at $indexDir"))
+
+  private def writeManifest(spark: SparkSession, indexDir: String,
+      rows: Seq[Row]): Unit = {
+    import scala.jdk.CollectionConverters._
+    VersionedTable.writeLocal(spark.createDataFrame(rows.asJava, manifestSchema),
+      manifestDir(indexDir))
+    ()
+  }
+
+  private def segRow(segId: Long, nDocs: Long, totalLen: Long, nBuckets: Int) =
+    Row("seg", segId, nDocs, totalLen, nBuckets, null, null, null)
 
   private def listSegDirsUnder(root: String): Seq[Long] = {
     val d = new java.io.File(root)
@@ -74,143 +139,122 @@ object SegmentedBm25 {
   private def listSegDirs(indexDir: String): Seq[Long] =
     listSegDirsUnder(segDataRoot(indexDir))
 
-  /** Read ONLY the named segment directories (basePath keeps the
-    * `seg`/bucket partition columns). Reading the root instead would
-    * re-list every segment directory ever written — superseded
-    * segments stay on disk for manifest rollback until [[vacuum]] —
-    * so the per-append/per-search file-listing cost would grow with
-    * index AGE, not live size (the r10 soak's 3.3→5.7 s append-wall
-    * drift). */
-  private def readSegs(spark: SparkSession, root: String,
-      segs: Seq[Long]): DataFrame = {
+  /** Read ONLY the named directories under `root` (basePath keeps the
+    * `seg`/bucket partition columns; the declared schema skips
+    * inference). Reading the root instead would re-list every segment
+    * directory ever written — superseded segments stay on disk for
+    * manifest rollback until [[vacuum]] — so the per-append/per-search
+    * file-listing cost would grow with index AGE, not live size (the
+    * r10 soak's 3.3→5.7 s append-wall drift). */
+  private def readDirs(spark: SparkSession, root: String, dirs: Seq[String],
+      schema: StructType): DataFrame =
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", root)
+      .parquet(dirs.map(d => s"$root/$d"): _*)
+
+  private def readSegs(spark: SparkSession, root: String, segs: Seq[Long],
+      schema: StructType): DataFrame = {
     require(segs.nonEmpty, s"no live segments under $root")
-    spark.read.option("basePath", root)
-      .parquet(segs.map(s => s"$root/seg=$s"): _*)
+    readDirs(spark, root, segs.map(s => s"seg=$s"), schema)
   }
 
-  private def readManifest(spark: SparkSession, indexDir: String): Option[DataFrame] =
-    // per-version LOCAL manifest read (r19): the maintain() cadence
-    // bounds the manifest to O(maxSegments + recent tombstones)
-    // forever, a manifest version is immutable, and every
-    // search/append/maintain was paying a parquet scan job to read it
-    VersionedTable.latestVersion(manifestDir(indexDir))
-      .map(_ => VersionedTable.readLatestLocal(spark, manifestDir(indexDir)))
+  private def dropTombstoned(df: DataFrame, tombs: DataFrame): DataFrame =
+    df.join(tombs,
+      col("doc_id") === col("t_doc") && col("seg") < col("before_seg"),
+      "left_anti")
+
+  /** Write a (doc_id, dl) sidecar; its (row count, Σ dl) are observed
+    * on the write itself — the segment's manifest stats. */
+  private def writeDocMeta(dm: DataFrame, path: String): (Long, Long) = {
+    val obs = Observation()
+    dm.observe(obs, count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("len"))
+      .write.mode("errorifexists").parquet(path)
+    val m = obs.get
+    (m("n").asInstanceOf[Long], m("len").asInstanceOf[Long])
+  }
 
   /** Append one batch of documents as a new segment. Documents whose
     * id already exists in a live prior segment are REPLACED: their
-    * previous copy is tombstoned (found via the bucket-pruned docmeta
-    * probe, cost O(batch), and the tombstone carries the old dl so
-    * global stats stay exact). Returns the new segment id. */
+    * previous copy is tombstoned (found by joining the batch's ids
+    * against the live prior sidecars, and the tombstone carries the
+    * old dl so global stats stay exact). Returns the new segment id. */
   def append(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, nBuckets: Int = Retrieval.TfBuckets): Long = {
     val spark = docs.sparkSession
-    val manifest = readManifest(spark, indexDir)
-    val priorSegRows = manifest
-      .map(_.filter(col("kind") === "seg").select("seg_id", "n_buckets")
-        .collect().toSeq)
-      .getOrElse(Seq.empty)
-    val priorSegs = priorSegRows.map(_.getLong(0))
+    val prior = readManifest(spark, indexDir).getOrElse(Manifest(Seq.empty))
     // tok_bucket values are hash(tok) mod n_buckets: a segment written
     // with a different bucket count would silently miss postings under
     // the isin pruning in search/compact — refuse mixed counts up
     // front (compact + rebuild to change the bucket count)
-    val priorNb = priorSegRows.map(_.getInt(1)).distinct
+    val priorNb = prior.bucketCounts
     require(priorNb.forall(_ == nBuckets),
       s"append nBuckets=$nBuckets but index has n_buckets=${priorNb.mkString(",")}; " +
         "bucket pruning requires one uniform count per index")
     // skip past orphans from crashed appends too
-    val segId = ((priorSegs ++ listSegDirs(indexDir)) :+ 0L).max + 1
+    val segId = ((prior.segIds ++ listSegDirs(indexDir)) :+ 0L).max + 1
 
-    val tf = Retrieval.termFrequencies(docs,
-        col(idCol).cast("long"), col(textCol))
+    val (id, text) = (col(idCol).cast("long"), col(textCol))
+    Retrieval.termFrequencies(docs, id, text)
       .withColumn("tok_bucket", tokBucket(nBuckets))
-    tf.write.mode("errorifexists").partitionBy("tok_bucket")
+      .write.mode("errorifexists").partitionBy("tok_bucket")
       .parquet(s"${segDataRoot(indexDir)}/seg=$segId")
-    val dm = tf.select(col("doc_id"), col("dl")).distinct()
-      .withColumn("doc_bucket", docBucket)
-    dm.write.mode("errorifexists").partitionBy("doc_bucket")
-      .parquet(s"${docMetaRoot(indexDir)}/seg=$segId")
+    // the postings' (doc_id, dl) pairs without their aggregate: a null
+    // text has no postings
+    val (nNew, lenNew) = writeDocMeta(
+      docs.filter(text.isNotNull)
+        .select(id.as("doc_id"), size(Retrieval.tokens(text)).cast("long").as("dl"))
+        .distinct(),
+      s"${docMetaRoot(indexDir)}/seg=$segId")
 
-    // stats + replacement probe run off the just-written sidecar —
-    // the materialization IS the checkpoint, no lazy frame crosses
-    // executions
-    val dmBack = spark.read.parquet(s"${docMetaRoot(indexDir)}/seg=$segId")
-      .localCheckpoint(true)
-    val st = dmBack.agg(count(lit(1)).as("n"), sum("dl").as("len")).head()
-    val (nNew, lenNew) = (st.getLong(0), st.getAs[Long]("len"))
-
-    val tombNew: DataFrame = manifest match {
-      case Some(m) if priorSegs.nonEmpty =>
-        val batchBuckets = dmBack.select("doc_bucket").distinct()
-          .collect().map(_.getAs[Number]("doc_bucket").longValue()).toSeq
-        val priorTombs = m.filter(col("kind") === "tomb")
-          .select(col("doc_id").as("t_doc"), col("before_seg"))
-        // manifest-listed prior segments ONLY (explicit paths): orphan
-        // docmeta dirs a crashed/replayed append left behind must not
-        // be read (they'd tombstone "prior copies" the manifest never
-        // served, corrupting nDocs/avgdl), and superseded dirs
-        // awaiting vacuum must not even be LISTED
-        val priorMeta = readSegs(spark, docMetaRoot(indexDir), priorSegs)
-          .filter(col("doc_bucket").isin(batchBuckets: _*))
-          .join(dmBack.select(col("doc_id")), "doc_id")
-          .join(priorTombs,
-            col("doc_id") === col("t_doc") && col("seg") < col("before_seg"),
-            "left_anti")
-        // invariant: at most one live prior copy per doc (every
-        // earlier copy was tombstoned by ITS replacing append) — the
-        // max-struct is a belt against manual segment surgery
-        priorMeta.groupBy("doc_id")
-          .agg(max(struct(col("seg"), col("dl"))).as("s"))
-          .select(
-            lit("tomb").as("kind"), lit(null).cast("long").as("seg_id"),
-            lit(null).cast("long").as("n_docs"),
-            lit(null).cast("long").as("total_len"),
-            lit(null).cast("int").as("n_buckets"),
-            col("doc_id"), lit(segId).as("before_seg"),
-            col("s.dl").as("dl"))
-      case _ => spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), manifestSchema)
-    }
-    val segRow = spark.createDataFrame(java.util.Arrays.asList(
-      Row("seg", segId, nNew, lenNew, nBuckets, null, null, null)), manifestSchema)
-    val newManifest = manifest.map(_.unionByName(segRow))
-      .getOrElse(segRow).unionByName(tombNew)
-    VersionedTable.write(newManifest, manifestDir(indexDir))
+    val tombNew =
+      if (prior.segs.isEmpty) Seq.empty
+      else replacedCopies(spark, indexDir, prior, segId)
+        .map(r => Row("tomb", null, null, null, null, r.getLong(0), segId, r.getLong(1)))
+    writeManifest(spark, indexDir,
+      prior.rows ++ (segRow(segId, nNew, lenNew, nBuckets) +: tombNew))
     segId
   }
 
-  /** Search the live index: manifest-listed segments only, pruned to
-    * query-term buckets, tombstoned copies anti-joined out, global
-    * stats corrected from the manifest's exact numbers (one tiny
-    * aggregate job — never a corpus scan). Same driver-side query
+  /** (doc_id, dl) of the live prior copy of every document of segment
+    * `segId` — manifest-listed prior sidecars ONLY (explicit paths):
+    * orphan docmeta dirs a crashed/replayed append left behind must not
+    * be read (they'd tombstone "prior copies" the manifest never
+    * served, corrupting nDocs/avgdl), and superseded dirs awaiting
+    * vacuum must not even be LISTED. */
+  private def replacedCopies(spark: SparkSession, indexDir: String,
+      prior: Manifest, segId: Long): Seq[Row] = {
+    val root = docMetaRoot(indexDir)
+    val batchIds = readSegs(spark, root, Seq(segId), docMetaSchema).select("doc_id")
+    // invariant: at most one live prior copy per doc (every earlier
+    // copy was tombstoned by ITS replacing append) — the max-struct is
+    // a belt against manual segment surgery
+    dropTombstoned(
+        readSegs(spark, root, prior.segIds, docMetaSchema).join(batchIds, "doc_id"),
+        prior.tombFrame(spark))
+      .groupBy("doc_id")
+      .agg(max(struct(col("seg"), col("dl"))).as("s"))
+      .select(col("doc_id"), col("s.dl"))
+      .collect().toSeq
+  }
+
+  /** Search the live index: manifest-listed segments only, read as
+    * the query-term bucket leaves, tombstoned copies anti-joined out,
+    * global stats from the manifest's exact numbers (driver
+    * arithmetic — never a corpus scan). Same driver-side query
     * handling as [[Retrieval.searchIndex]]. */
   def search(spark: SparkSession, indexDir: String, queries: DataFrame,
       idCol: String, textCol: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val manifest = readManifest(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no segmented index at $indexDir"))
-    // one job: seg list + seg stats + tombstone corrections together
-    val isSeg = col("kind") === "seg"
-    val agg = manifest.agg(
-      collect_list(when(isSeg, col("seg_id"))).as("segs"),
-      sum(when(isSeg, col("n_docs"))).as("seg_docs"),
-      sum(when(isSeg, col("total_len"))).as("seg_len"),
-      max(when(isSeg, col("n_buckets"))).as("n_buckets"),
-      count(when(!isSeg, lit(1))).as("n_tomb"),
-      coalesce(sum(when(!isSeg, col("dl"))), lit(0L)).as("tomb_len"),
-      count_distinct(when(isSeg, col("n_buckets"))).as("nb_distinct")).head()
-    val segs = agg.getSeq[Long](0)
-    val nDocs = agg.getLong(1) - agg.getLong(4)
-    val totalLen = agg.getLong(2) - agg.getLong(5)
-    val nBuckets = agg.getInt(3)
+    val m = servingManifest(spark, indexDir)
     // append enforces uniformity; this guards manual segment surgery —
     // mixed counts would silently drop matching postings under pruning
-    require(agg.getLong(6) <= 1L,
-      s"segments disagree on n_buckets at $indexDir; compact to repair")
-    val avgdl = totalLen.toDouble / nDocs
+    val nbs = m.bucketCounts
+    require(nbs.length == 1, s"segments disagree on n_buckets at $indexDir; compact to repair")
+    val avgdl = m.totalLen.toDouble / m.nDocs
 
     val qRows = Retrieval.queryTerms(queries, idCol, textCol)
-      .withColumn("__tb", tokBucket(nBuckets)).collect()
+      .withColumn("__tb", tokBucket(nbs.head)).collect()
     val buckets = qRows.map(_.getAs[Long]("__tb")).distinct.toSeq
     val qSchema = StructType(Seq(
       StructField("q_id", queries.schema(idCol).dataType),
@@ -218,14 +262,16 @@ object SegmentedBm25 {
     val qTerms = spark.createDataFrame(
       java.util.Arrays.asList(qRows.map(r => Row(r.get(0), r.get(1))): _*), qSchema)
 
-    val tombs = manifest.filter(col("kind") === "tomb")
-      .select(col("doc_id").as("t_doc"), col("before_seg"))
-    val live = readSegs(spark, segDataRoot(indexDir), segs)
-      .filter(col("tok_bucket").isin(buckets: _*))
-      .join(tombs,
-        col("doc_id") === col("t_doc") && col("seg") < col("before_seg"),
-        "left_anti")
-    Retrieval.scoreBm25(live, nDocs, avgdl, qTerms, k, k1, b)
+    val root = segDataRoot(indexDir)
+    val leaves = for {
+      s <- m.segIds; b <- buckets
+      leaf = s"seg=$s/tok_bucket=$b" if new java.io.File(s"$root/$leaf").isDirectory
+    } yield leaf
+    val live = dropTombstoned(
+      readDirs(spark, root, leaves, postingsSchema)
+        .filter(col("tok_bucket").isin(buckets: _*)),
+      m.tombFrame(spark))
+    Retrieval.scoreBm25(live, m.nDocs, avgdl, qTerms, k, k1, b)
   }
 
   /** Build-if-absent convenience mirroring [[Retrieval.ensureIndex]]'s
@@ -234,7 +280,7 @@ object SegmentedBm25 {
   def ensureIndex(dataDir: String, tag: String)(build: String => Unit): String =
     synchronized {
       val f = new java.io.File(s"$dataDir/documents.parquet")
-      val live = ":segbm25:v1"
+      val live = ":segbm25:v2"
       val key =
         s"${f.getAbsolutePath}:${f.lastModified}:${f.length}:$tag$live"
       val dir = FingerprintCache.prepare("graft_segbm25", key, live)
@@ -251,21 +297,16 @@ object SegmentedBm25 {
     * probe until compacted away). Under that cadence the manifest
     * holds ≤ maxSegments+1 seg rows plus only the tombstones created
     * since the last compact — which at most `maxSegments` appends ago
-    * — so every driver-side manifest `collect()` in append/search/
-    * compact stays O(maxSegments + recent batch sizes) FOREVER,
-    * independent of index age or total corpus size. Returns the
-    * compacted segment id when compaction ran. */
+    * — so the driver-held manifest stays O(maxSegments + recent batch
+    * sizes) FOREVER, independent of index age or total corpus size.
+    * The thresholds are driver arithmetic on the cached manifest: an
+    * idle call launches no job. Returns the compacted segment id when
+    * compaction ran. */
   def maintain(spark: SparkSession, indexDir: String, maxSegments: Int = 8,
       maxTombPct: Int = 20, keepManifests: Int = 3): Option[Long] =
     readManifest(spark, indexDir).flatMap { m =>
-      val isSeg = col("kind") === "seg"
-      val r = m.agg(
-        count(when(isSeg, lit(1))).as("n_seg"),
-        coalesce(sum(when(isSeg, col("n_docs"))), lit(0L)).as("gross_docs"),
-        count(when(!isSeg, lit(1))).as("n_tomb")).head()
-      val (nSeg, nTomb) = (r.getLong(0), r.getLong(2))
-      val nLive = r.getLong(1) - nTomb
-      if (nSeg > maxSegments || nTomb * 100L > nLive.max(1L) * maxTombPct) {
+      val nTomb = m.tombs.size.toLong
+      if (m.segs.size > maxSegments || nTomb * 100L > m.nDocs.max(1L) * maxTombPct) {
         val seg = compact(spark, indexDir)
         vacuum(spark, indexDir, keepManifests)
         Some(seg)
@@ -288,10 +329,12 @@ object SegmentedBm25 {
     val mDir = manifestDir(indexDir)
     if (VersionedTable.latestVersion(mDir).isEmpty) return
     VersionedTable.pruneVersions(mDir, keepManifests)
-    val referenced = VersionedTable.listVersions(mDir).flatMap { v =>
-      spark.read.parquet(s"$mDir/v=$v").filter(col("kind") === "seg")
-        .select("seg_id").collect().map(_.getLong(0))
-    }.toSet
+    // the retained versions in one read: the serving one is cached on
+    // the driver, but rollback targets are not
+    val referenced = spark.read.schema(manifestSchema)
+      .parquet(VersionedTable.listVersions(mDir).map(v => s"$mDir/v=$v"): _*)
+      .filter(col("kind") === "seg").select("seg_id").distinct()
+      .collect().map(_.getLong(0)).toSet
     if (referenced.isEmpty) return
     // ids above the newest referenced one belong to an append/compact
     // whose manifest flip hasn't landed (or a crashed one the next
@@ -312,36 +355,21 @@ object SegmentedBm25 {
     * anti-join side. Superseded segment directories stay on disk for
     * manifest-version rollback. Returns the new segment id. */
   def compact(spark: SparkSession, indexDir: String): Long = {
-    val manifest = readManifest(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no segmented index at $indexDir"))
-    val segRows = manifest.filter(col("kind") === "seg")
-      .select("seg_id", "n_buckets").collect()
-    val segs = segRows.map(_.getLong(0)).toSeq
-    val nbs = segRows.map(_.getInt(1)).distinct
+    val m = servingManifest(spark, indexDir)
+    val nbs = m.bucketCounts
     require(nbs.length == 1,
       s"segments disagree on n_buckets (${nbs.mkString(",")}) at $indexDir")
-    val nBuckets = nbs.head
-    val segId = (segs ++ listSegDirs(indexDir)).max + 1
-    val tombs = manifest.filter(col("kind") === "tomb")
-      .select(col("doc_id").as("t_doc"), col("before_seg"))
-    val live = readSegs(spark, segDataRoot(indexDir), segs)
-      .join(tombs,
-        col("doc_id") === col("t_doc") && col("seg") < col("before_seg"),
-        "left_anti")
+    val segId = (m.segIds ++ listSegDirs(indexDir)).max + 1
+    dropTombstoned(readSegs(spark, segDataRoot(indexDir), m.segIds, postingsSchema),
+        m.tombFrame(spark))
       .select("doc_id", "dl", "tok", "tf", "tok_bucket")
-    live.write.mode("errorifexists").partitionBy("tok_bucket")
+      .write.mode("errorifexists").partitionBy("tok_bucket")
       .parquet(s"${segDataRoot(indexDir)}/seg=$segId")
-    val dm = spark.read.parquet(s"${segDataRoot(indexDir)}/seg=$segId")
-      .select(col("doc_id"), col("dl")).distinct()
-      .withColumn("doc_bucket", docBucket)
-    dm.write.mode("errorifexists").partitionBy("doc_bucket")
-      .parquet(s"${docMetaRoot(indexDir)}/seg=$segId")
-    val st = spark.read.parquet(s"${docMetaRoot(indexDir)}/seg=$segId")
-      .agg(count(lit(1)), sum("dl")).head()
-    val segRow = spark.createDataFrame(java.util.Arrays.asList(
-      Row("seg", segId, st.getLong(0), st.getAs[Long](1), nBuckets,
-        null, null, null)), manifestSchema)
-    VersionedTable.write(segRow, manifestDir(indexDir))
+    val (nDocs, totalLen) = writeDocMeta(
+      readSegs(spark, segDataRoot(indexDir), Seq(segId), postingsSchema)
+        .select("doc_id", "dl").distinct(),
+      s"${docMetaRoot(indexDir)}/seg=$segId")
+    writeManifest(spark, indexDir, Seq(segRow(segId, nDocs, totalLen, nbs.head)))
     segId
   }
 }

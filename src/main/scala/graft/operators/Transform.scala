@@ -1023,18 +1023,17 @@ object Transform {
     * every execution. [[XsltSheet]] is an immutable value whose
     * keep/output methods build fresh Columns per call, so one
     * compiled sheet serves any number of plans. Only successful
-    * compiles are cached (a throwing compile re-throws per call). */
-  private val sheetCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Map[String, String], Option[String], String, Boolean), XsltSheet]()
+    * compiles are cached (a throwing compile re-throws per call); the
+    * least recently used of more than 64 distinct sheets is dropped. */
+  private[graft] val sheetCache = new BoundedMemo[
+    (String, Map[String, String], Option[String], String, Boolean), XsltSheet](64)
 
   private def compileSheet(xslt: String, includes: Map[String, String],
       externalContext: Option[String],
       moduleWrapper: String = "record",
       nsAware: Boolean = false): XsltSheet =
-    sheetCache.computeIfAbsent(
-      (xslt, includes, externalContext, moduleWrapper, nsAware),
-      _ => compileSheetUncached(xslt, includes, externalContext,
-        moduleWrapper, nsAware))
+    sheetCache.getOrCompute((xslt, includes, externalContext, moduleWrapper, nsAware))(
+      compileSheetUncached(xslt, includes, externalContext, moduleWrapper, nsAware))
 
   private def compileSheetUncached(xslt: String, includes: Map[String, String],
       externalContext: Option[String],

@@ -155,17 +155,17 @@ object Validate {
     * re-compiled the same literal schema per execution. SchRule is an
     * immutable value (the embedded Column is an expression tree, not
     * session state), so one compiled rule set serves any plan over a
-    * frame with the named column. Keyed on the Column's EXPRESSION
-    * (structural equality) so distinct input columns never collide. */
-  private val schCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, org.apache.spark.sql.catalyst.expressions.Expression, Boolean),
-    Seq[SchRule]]()
+    * frame with the named column. Keyed on the Column itself: Column
+    * equality compares the normalized expression tree, so distinct
+    * input columns never collide and a repeat call hits (the wrapped
+    * catalyst expression would not: it keeps the call-site origin,
+    * whose stack-trace array compares by reference). The least
+    * recently used of more than 64 distinct keys is dropped. */
+  private[graft] val schCache = new BoundedMemo[(String, Column, Boolean), Seq[SchRule]](64)
 
   def compileSchematron(sch: String, xml: Column,
       nsAware: Boolean = false): Seq[SchRule] =
-    schCache.computeIfAbsent(
-      (sch, org.apache.spark.sql.GraftShims.expression(xml), nsAware),
-      _ => compileSchematronUncached(sch, xml, nsAware))
+    schCache.getOrCompute((sch, xml, nsAware))(compileSchematronUncached(sch, xml, nsAware))
 
   private def compileSchematronUncached(sch: String, xml: Column,
       nsAware: Boolean = false): Seq[SchRule] = {

@@ -220,12 +220,10 @@ object TextEvents {
     * into the bounded-heap TopKPerKey operator. */
   def ta9Keywords(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // nDocs folded into the plan (r19, verdict item 5): the separate
-    // docs.count() action was a whole extra job per execution; a
-    // broadcast one-row aggregate cross-joined into the scoring
-    // projection carries the SAME long count (same double division,
-    // bit-identical idf) inside the one job
-    val nDocsDf = docs.agg(count(lit(1)).as("n_docs"))
+    // a driver literal, not a cross-joined one-row aggregate: folding
+    // the count into the plan measured no gain and put a nested-loop
+    // join and a single-partition exchange in the plan
+    val nDocs = docs.count()
     val toks = docs.select(col("doc_id"),
       explode(split(trim(lower(col("text"))), "\\s+")).as("tok"))
     // single-plan checkpoint (r18): tf feeds BOTH the broadcast df
@@ -235,9 +233,8 @@ object TextEvents {
       .localCheckpoint(false)
     val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     val scored = tf.join(broadcast(dfreq), "tok")
-      .crossJoin(broadcast(nDocsDf))
       .select(col("doc_id"), col("tok"),
-        round(col("tf") * log(col("n_docs").cast("double") / col("df")), 4).as("tfidf"))
+        round(col("tf") * log(lit(nDocs.toDouble) / col("df")), 4).as("tfidf"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("tfidf").desc, col("tok").asc)
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)

@@ -59,6 +59,11 @@ class PlanAuditSpec extends AnyFunSuite {
     "v11_integrity",     // per-relation global count rollup (1 row each);
                          // the join itself is key-partitioned — only the
                          // 3-counter reduction serializes
+    "p9_temperature",    // the p10 shape: n_min is a window-min over
+                         // the O(|sources|)-row per-source count
+                         // aggregate (one row per source), broadcast
+                         // back to the docs; the per-doc draw stays
+                         // map-side
     "p10_token_budget",  // cumsum window over the O(|sources|)-row
                          // source-level aggregate — the corpus-wide
                          // token count stays map-side partial

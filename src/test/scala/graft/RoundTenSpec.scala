@@ -214,7 +214,7 @@ class RoundTenSpec extends AnyFunSuite {
         operators.SegmentedBm25.append(
           docs.filter(col("doc_id") >= 5), "doc_id", "text", d)
         ()
-      }, ":segbm25:v1")
+      }, ":segbm25:v2")
   }
 
   test("graft_pq cache sweeps orphans, keeps the live build") {
