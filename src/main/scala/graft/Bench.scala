@@ -13,8 +13,9 @@ object Bench {
     GraftExtensions.installNullCheckSimplifier(spark)
     // warmup: tiny jobs exercising the scan, window, broadcast-join
     // and native vector codegen paths, so JIT/codegen init isn't
-    // charged to whichever query happens to run first
-    locally {
+    // charged to whichever query happens to run first; best effort —
+    // an unreadable SF dir surfaces as failed queries, not a crash
+    try {
       import org.apache.spark.sql.functions._
       val r = spark.read.parquet(s"$sfDir/region.parquet")
       r.count()
@@ -31,7 +32,7 @@ object Bench {
       spark.range(1000).agg(sum(graft.functions.Vectors.cosine4(
         array(col("id").cast("double"), lit(1.0)),
         array(lit(2.0), lit(1.0))))).collect()
-    }
+    } catch { case _: Throwable => () }
     // optional comma-separated query filter for isolating one timing
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val selected = only match {
@@ -104,21 +105,25 @@ object Bench {
     val runStat0 = cpuStat()
     val steals = scala.collection.mutable.LinkedHashMap[String, Double]()
     val builds = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val results = selected.map { case (name, fn) =>
+    // a query that throws is reported under `failed`, never timed: it
+    // stays out of `queries` and the total
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
+    val results = selected.flatMap { case (name, fn) =>
       if (indexedQueries(name)) {
         val b0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
         builds(name) = (System.nanoTime() - b0) / 1e9
       }
       val s0 = cpuStat()
-      val times = (1 to reps).map { _ =>
+      val times = (1 to reps).iterator.map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
+        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case _: Throwable => None }
+      }.takeWhile(_.isDefined).flatten.toSeq
       steals(name) = stealPct(s0, cpuStat())
       sweep()
-      name -> times.min
+      if (times.size == reps) Some(name -> times.min)
+      else { failed += name; None }
     }
     val runSteal = stealPct(runStat0, cpuStat())
     // ms precision keeps the line short enough for tail-bounded log
@@ -148,8 +153,9 @@ object Bench {
     // the small `sf` terminator) — a truncated capture then retains
     // per-query timings instead of the steal/build maps; every field
     // and its meaning is unchanged, only the order moved
+    val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","run_steal":${f2(runSteal)},"build":$bs,"steal":$ss,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","run_steal":${f2(runSteal)},"build":$bs,"steal":$ss,"failed":$fs,"queries":$qs,"sf":"$sfDir"}"""
     println(line)
     // compact summary printed AFTER the full line (r19): the full
     // 188-query line is ~5.5 KB and has never fit a tail-bounded
@@ -163,7 +169,7 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val summary =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"cpus":$cpus,"reps":$reps,"run_steal":${f2(runSteal)},"sf":"$sfDir","top":$topN,"full":"BENCH_LAST.json"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"cpus":$cpus,"reps":$reps,"run_steal":${f2(runSteal)},"sf":"$sfDir","failed":$fs,"top":$topN,"full":"BENCH_LAST.json"}"""
     println(summary)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LAST.json"), line + "\n")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{FingerprintCache, VersionedTable}
+import graft.sources.{FingerprintCache, Segments, VersionedTable}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -128,37 +128,6 @@ object SegmentedBm25 {
   private def segRow(segId: Long, nDocs: Long, totalLen: Long, nBuckets: Int) =
     Row("seg", segId, nDocs, totalLen, nBuckets, null, null, null)
 
-  private def listSegDirsUnder(root: String): Seq[Long] = {
-    val d = new java.io.File(root)
-    if (!d.exists()) Seq.empty
-    else d.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("seg="))
-      .map(_.getName.stripPrefix("seg=").toLong).sorted
-  }
-
-  private def listSegDirs(indexDir: String): Seq[Long] =
-    listSegDirsUnder(segDataRoot(indexDir))
-
-  /** Read ONLY the named directories under `root` (basePath keeps the
-    * `seg`/bucket partition columns; the declared schema skips
-    * inference). Reading the root instead would re-list every segment
-    * directory ever written — superseded segments stay on disk for
-    * manifest rollback until [[vacuum]] — so the per-append/per-search
-    * file-listing cost would grow with index AGE, not live size (the
-    * r10 soak's 3.3→5.7 s append-wall drift). */
-  private def readDirs(spark: SparkSession, root: String, dirs: Seq[String],
-      schema: StructType): DataFrame =
-    if (dirs.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else spark.read.schema(schema).option("basePath", root)
-      .parquet(dirs.map(d => s"$root/$d"): _*)
-
-  private def readSegs(spark: SparkSession, root: String, segs: Seq[Long],
-      schema: StructType): DataFrame = {
-    require(segs.nonEmpty, s"no live segments under $root")
-    readDirs(spark, root, segs.map(s => s"seg=$s"), schema)
-  }
-
   private def dropTombstoned(df: DataFrame, tombs: DataFrame): DataFrame =
     df.join(tombs,
       col("doc_id") === col("t_doc") && col("seg") < col("before_seg"),
@@ -191,21 +160,20 @@ object SegmentedBm25 {
     require(priorNb.forall(_ == nBuckets),
       s"append nBuckets=$nBuckets but index has n_buckets=${priorNb.mkString(",")}; " +
         "bucket pruning requires one uniform count per index")
-    // skip past orphans from crashed appends too
-    val segId = ((prior.segIds ++ listSegDirs(indexDir)) :+ 0L).max + 1
+    val segId = Segments.nextId(prior.segIds, segDataRoot(indexDir), docMetaRoot(indexDir))
 
     val (id, text) = (col(idCol).cast("long"), col(textCol))
     Retrieval.termFrequencies(docs, id, text)
       .withColumn("tok_bucket", tokBucket(nBuckets))
       .write.mode("errorifexists").partitionBy("tok_bucket")
-      .parquet(s"${segDataRoot(indexDir)}/seg=$segId")
+      .parquet(Segments.path(segDataRoot(indexDir), segId))
     // the postings' (doc_id, dl) pairs without their aggregate: a null
     // text has no postings
     val (nNew, lenNew) = writeDocMeta(
       docs.filter(text.isNotNull)
         .select(id.as("doc_id"), size(Retrieval.tokens(text)).cast("long").as("dl"))
         .distinct(),
-      s"${docMetaRoot(indexDir)}/seg=$segId")
+      Segments.path(docMetaRoot(indexDir), segId))
 
     val tombNew =
       if (prior.segs.isEmpty) Seq.empty
@@ -225,12 +193,12 @@ object SegmentedBm25 {
   private def replacedCopies(spark: SparkSession, indexDir: String,
       prior: Manifest, segId: Long): Seq[Row] = {
     val root = docMetaRoot(indexDir)
-    val batchIds = readSegs(spark, root, Seq(segId), docMetaSchema).select("doc_id")
+    val batchIds = Segments.read(spark, root, Seq(segId), docMetaSchema).select("doc_id")
     // invariant: at most one live prior copy per doc (every earlier
     // copy was tombstoned by ITS replacing append) — the max-struct is
     // a belt against manual segment surgery
     dropTombstoned(
-        readSegs(spark, root, prior.segIds, docMetaSchema).join(batchIds, "doc_id"),
+        Segments.read(spark, root, prior.segIds, docMetaSchema).join(batchIds, "doc_id"),
         prior.tombFrame(spark))
       .groupBy("doc_id")
       .agg(max(struct(col("seg"), col("dl"))).as("s"))
@@ -262,13 +230,9 @@ object SegmentedBm25 {
     val qTerms = spark.createDataFrame(
       java.util.Arrays.asList(qRows.map(r => Row(r.get(0), r.get(1))): _*), qSchema)
 
-    val root = segDataRoot(indexDir)
-    val leaves = for {
-      s <- m.segIds; b <- buckets
-      leaf = s"seg=$s/tok_bucket=$b" if new java.io.File(s"$root/$leaf").isDirectory
-    } yield leaf
     val live = dropTombstoned(
-      readDirs(spark, root, leaves, postingsSchema)
+      Segments.read(spark, segDataRoot(indexDir), m.segIds, postingsSchema,
+          buckets.map(b => s"tok_bucket=$b"))
         .filter(col("tok_bucket").isin(buckets: _*)),
       m.tombFrame(spark))
     Retrieval.scoreBm25(live, m.nDocs, avgdl, qTerms, k, k1, b)
@@ -335,19 +299,7 @@ object SegmentedBm25 {
       .parquet(VersionedTable.listVersions(mDir).map(v => s"$mDir/v=$v"): _*)
       .filter(col("kind") === "seg").select("seg_id").distinct()
       .collect().map(_.getLong(0)).toSet
-    if (referenced.isEmpty) return
-    // ids above the newest referenced one belong to an append/compact
-    // whose manifest flip hasn't landed (or a crashed one the next
-    // append will skip past) — never touch those
-    val maxRef = referenced.max
-    Seq(segDataRoot(indexDir), docMetaRoot(indexDir)).foreach { root =>
-      listSegDirsUnder(root)
-        .filter(s => s < maxRef && !referenced(s))
-        .foreach { s =>
-          VersionedTable.deleteRecursively(
-            java.nio.file.Paths.get(root, s"seg=$s"))
-        }
-    }
+    Segments.vacuum(referenced, segDataRoot(indexDir), docMetaRoot(indexDir))
   }
 
   /** Fold all live postings into one fresh segment and clear the
@@ -359,16 +311,16 @@ object SegmentedBm25 {
     val nbs = m.bucketCounts
     require(nbs.length == 1,
       s"segments disagree on n_buckets (${nbs.mkString(",")}) at $indexDir")
-    val segId = (m.segIds ++ listSegDirs(indexDir)).max + 1
-    dropTombstoned(readSegs(spark, segDataRoot(indexDir), m.segIds, postingsSchema),
+    val segId = Segments.nextId(m.segIds, segDataRoot(indexDir), docMetaRoot(indexDir))
+    dropTombstoned(Segments.read(spark, segDataRoot(indexDir), m.segIds, postingsSchema),
         m.tombFrame(spark))
       .select("doc_id", "dl", "tok", "tf", "tok_bucket")
       .write.mode("errorifexists").partitionBy("tok_bucket")
-      .parquet(s"${segDataRoot(indexDir)}/seg=$segId")
+      .parquet(Segments.path(segDataRoot(indexDir), segId))
     val (nDocs, totalLen) = writeDocMeta(
-      readSegs(spark, segDataRoot(indexDir), Seq(segId), postingsSchema)
+      Segments.read(spark, segDataRoot(indexDir), Seq(segId), postingsSchema)
         .select("doc_id", "dl").distinct(),
-      s"${docMetaRoot(indexDir)}/seg=$segId")
+      Segments.path(docMetaRoot(indexDir), segId))
     writeManifest(spark, indexDir, Seq(segRow(segId, nDocs, totalLen, nbs.head)))
     segId
   }

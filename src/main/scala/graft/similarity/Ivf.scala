@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.functions.Vectors
+import graft.sources.{Segments, VersionedTable}
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -114,16 +115,6 @@ object Ivf {
       explode(graft.plans.VectorExpr.nearestLists(col("v"), cents, nProbe))
         .as("list_id"))
 
-  /** Manifest-listed segment trees only: the `root/seg=<N>` paths
-    * under `basePath`, read with the base table's schema, so file
-    * listing covers the live segments and never the superseded trees
-    * compaction leaves on disk (the SegmentedBm25.readSegs fix). */
-  private[similarity] def readSegments(spark: org.apache.spark.sql.SparkSession,
-      root: String, segs: Seq[Long],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.option("basePath", root).schema(schema)
-      .parquet(segs.map(s => s"$root/seg=$s"): _*)
-
   /** Persist an IVF index: centroids and list assignments land as two
     * versioned tables behind atomic latest-pointers — build once,
     * search many, with the same publish-then-swap lifecycle as the
@@ -156,152 +147,46 @@ object Ivf {
     * repaired by a periodic [[buildIndex]] re-train + [[compactSegments]]
     * — exactly Lucene's add-then-merge rhythm applied to ANN.
     *
-    * `tag` makes the append IDEMPOTENT under streaming replay
-    * (VocabIndex's tag protocol): the manifest version that lists the
-    * new segment carries the `(lineage, batchId)` tag, so a replayed
-    * batch whose manifest already committed is detected and SKIPPED
-    * (finishing the pointer swap if the crash interrupted it) instead
-    * of re-appending the same vectors as a second live segment —
-    * unlike BM25's tombstone merge, an IVF re-append has no
-    * replacement semantics, so without the tag a crash between the
-    * manifest flip and the stream's batch marker would serve
-    * duplicate (id, v) rows forever. Returns the (new or
+    * `tag` makes the append idempotent under streaming replay
+    * ([[Segments.append]]): a replayed `(lineage, batchId)` whose
+    * manifest already committed is skipped. Returns the (new or
     * already-committed) segment id. */
   def appendToIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      delta: DataFrame, tag: Option[String] = None): Long = {
-    val manifestDir0 = s"$dir/segmanifest"
-    tag.flatMap(t =>
-        graft.sources.VersionedTable.taggedVersion(manifestDir0, t)) match {
-      case Some(v) =>
-        if (graft.sources.VersionedTable.latestVersion(manifestDir0).forall(_ < v))
-          graft.sources.VersionedTable.swapTo(manifestDir0, v)
-        return spark.read.parquet(s"$manifestDir0/v=$v")
-          .agg(max("seg_id")).head.getLong(0)
-      case None => ()
+      delta: DataFrame, tag: Option[String] = None): Long =
+    Segments.append(spark, s"$dir/segmanifest", tag, s"$dir/segments") { id =>
+      // the centroid read uses the per-version LOCAL cache: the table
+      // is metadata-class (bounded by the list-count knob) and
+      // immutable per version
+      val cents = centroidBook(VersionedTable.readLatestLocal(spark, s"$dir/centroids"))
+      probe(delta.select(col("id"), col("v")), cents, 1)
+        .select(col("q_id").as("id"), col("q_v").as("v"), col("list_id"))
+        .write.mode("errorifexists").partitionBy("list_id")
+        .parquet(Segments.path(s"$dir/segments", id))
     }
-    // centroid/manifest reads on this path use the per-version LOCAL
-    // cache: both tables are metadata-class (bounded by the list-count
-    // knob / the maintain() cadence) and immutable per version
-    val cents = centroidBook(graft.sources.VersionedTable
-      .readLatestLocal(spark, s"$dir/centroids"))
-    val assigned = probe(delta.select(col("id"), col("v")), cents, 1)
-      .select(col("q_id").as("id"), col("q_v").as("v"), col("list_id"))
-    val manifestDir = s"$dir/segmanifest"
-    val prior = manifestSegs(spark, manifestDir)
-    // skip past orphan seg dirs from crashed appends too (mirrors
-    // SegmentedBm25.listSegDirs): a crash between the segment write
-    // and the manifest flip leaves segments/seg=N on disk with no
-    // manifest row — deriving segId from the manifest alone would
-    // recompute the same id and die forever on errorifexists,
-    // wedging IvfStream's foreachBatch replay
-    val onDisk: Seq[Long] = {
-      val d = new java.io.File(s"$dir/segments")
-      if (!d.exists()) Seq.empty
-      else d.listFiles().toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith("seg="))
-        .map(_.getName.stripPrefix("seg=").toLong)
-    }
-    val segId = ((prior ++ onDisk) :+ 0L).max + 1
-    assigned.write.mode("errorifexists").partitionBy("list_id")
-      .parquet(s"$dir/segments/seg=$segId")
-    import spark.implicits._
-    graft.sources.VersionedTable.writeLocal(
-      (prior :+ segId).toDF("seg_id"), manifestDir, tag)
-    segId
-  }
-
-  /** Segment ids listed by the serving manifest version — driver-held
-    * rows, no job once cached; empty before the first append. */
-  private[similarity] def manifestSegs(spark: org.apache.spark.sql.SparkSession,
-      manifestDir: String): Seq[Long] =
-    graft.sources.VersionedTable.latestVersion(manifestDir)
-      .map(_ => graft.sources.VersionedTable.localRows(spark, manifestDir)
-        .map(_.getLong(0)))
-      .getOrElse(Seq.empty)
 
   /** Compaction-cadence contract (same bound as
     * [[graft.operators.SegmentedBm25.maintain]]): call after every
     * append — [[graft.streaming.IvfStream]] does — and the segment
     * manifest folds into the base table whenever it exceeds
-    * `maxSegments`, so the driver-side manifest `collect()` and the
-    * per-probe segment union stay O(maxSegments) forever, independent
-    * of how many micro-batches the index has absorbed. */
+    * `maxSegments` ([[Segments.maintain]]), so the driver-held manifest
+    * and the per-probe segment union stay O(maxSegments) forever,
+    * independent of how many micro-batches the index has absorbed. */
   def maintain(spark: org.apache.spark.sql.SparkSession, dir: String,
-      maxSegments: Int = 8): Option[Long] = {
-    // counted from the driver-held manifest rows: a count() on the
-    // local relation would still launch jobs
-    if (manifestSegs(spark, s"$dir/segmanifest").size > maxSegments)
-      Some(compactSegments(spark, dir))
-    else None
-  }
+      maxSegments: Int = 8): Option[Long] =
+    Segments.maintain(spark, s"$dir/segmanifest", maxSegments)(compactSegments(spark, dir))
 
   /** Fold appended segments into the base assignment table: one new
-    * lists version containing base ∪ segments, and an empty manifest.
-    * Superseded segment trees stay on disk for manifest rollback.
-    *
-    * The fold is made IDEMPOTENT by tagging the new lists version
-    * with the folded segment-id set (seg ids strictly increase, so
-    * the set names this fold uniquely): a crash between the lists
-    * swap and the manifest flip would otherwise serve base ∪
-    * segments as DUPLICATES forever — and a retrying compact would
-    * re-fold the duplicated base and compound them. With the tag,
-    * the retry (the next maintain() call — the manifest still
-    * exceeds the bound) finds the committed fold, finishes the
-    * pointer swap if it was lost, and just empties the manifest;
-    * the duplicate-serving window closes at recovery instead of
-    * never. */
-  def compactSegments(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    val segs = manifestSegs(spark, s"$dir/segmanifest").sorted
-    val tag = "compact:" + segs.mkString(",")
-    val listsDir = s"$dir/lists"
-    val lv = graft.sources.VersionedTable.taggedVersion(listsDir, tag) match {
-      case Some(v) =>
-        if (graft.sources.VersionedTable.latestVersion(listsDir).forall(_ < v))
-          graft.sources.VersionedTable.swapTo(listsDir, v)
-        v
-      case None =>
-        graft.sources.VersionedTable.writePartitioned(
-          liveLists(spark, dir).select("id", "v", "list_id"),
-          listsDir, "list_id", Some(tag))
-    }
-    import spark.implicits._
-    graft.sources.VersionedTable.writeLocal(
-      Seq.empty[Long].toDF("seg_id"), s"$dir/segmanifest")
-    lv
-  }
+    * lists version containing base ∪ segments, and an empty manifest,
+    * idempotent under a crash anywhere in between ([[Segments.compact]]).
+    * Superseded segment trees stay on disk for manifest rollback. */
+  def compactSegments(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
+    Segments.compact(spark, s"$dir/segmanifest", s"$dir/lists" -> (tag =>
+      VersionedTable.writePartitioned(liveLists(spark, dir), s"$dir/lists", "list_id",
+        Some(tag))))
 
-  /** Segment ids already folded into `tableDir`'s SERVING version,
-    * parsed from its `compact:` tag. Live readers subtract these from
-    * the manifest, which closes two windows in the compaction
-    * protocol: (a) between a committed fold swap and the
-    * manifest-empty write — a window that exists on EVERY normal
-    * compaction — a concurrent probe would otherwise read base ∪
-    * still-listed segments and serve every folded row twice; (b) an
-    * out-of-band append landing between a crashed fold and its
-    * retry changes the manifest (and so the retry's fold tag), and
-    * the retry would otherwise union the already-folded segments
-    * again as duplicates. With the subtraction, live reads are
-    * exactly base ∪ unfolded segments at every point of the
-    * protocol, concurrent or replayed. */
-  private[similarity] def foldedSegIds(tableDir: String): Set[Long] =
-    graft.sources.VersionedTable.servingTag(tableDir) match {
-      case Some(t) if t.startsWith("compact:") =>
-        t.stripPrefix("compact:").split(",")
-          .iterator.filter(_.nonEmpty).map(_.toLong).toSet
-      case _ => Set.empty
-    }
-
-  /** Base assignments ∪ manifest-listed segments not already folded
-    * into the serving base version (see [[foldedSegIds]]). */
-  private def liveLists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val base = graft.sources.VersionedTable.readLatest(spark, s"$dir/lists")
-    val folded = foldedSegIds(s"$dir/lists")
-    val segs = manifestSegs(spark, s"$dir/segmanifest").filterNot(folded)
-    if (segs.isEmpty) base
-    else base.unionByName(readSegments(spark, s"$dir/segments", segs, base.schema)
-      .select("id", "v", "list_id"))
-  }
+  /** Base assignments ∪ the unfolded manifest-listed segments. */
+  private def liveLists(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    Segments.live(spark, s"$dir/lists", s"$dir/segments", s"$dir/segmanifest")
 
   /** Search a persisted index: probe selection reads only the (tiny)
     * centroid table; the DISTINCT probed list ids — bounded by the

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.sources.{Segments, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -156,138 +157,67 @@ object Ivfpq {
   def appendToIndex(spark: SparkSession, dir: String, delta: DataFrame,
       idCol: String = "id", vecCol: String = "v",
       tag: Option[String] = None, dsub: Int = 8,
-      scale: Long = 10000L): Long = {
-    val manifestDir = s"$dir/segmanifest"
-    tag.flatMap(t =>
-        graft.sources.VersionedTable.taggedVersion(manifestDir, t)) match {
-      case Some(v) =>
-        if (graft.sources.VersionedTable.latestVersion(manifestDir).forall(_ < v))
-          graft.sources.VersionedTable.swapTo(manifestDir, v)
-        return spark.read.parquet(s"$manifestDir/v=$v")
-          .agg(max("seg_id")).head.getLong(0)
-      case None => ()
+      scale: Long = 10000L): Long =
+    Segments.append(spark, s"$dir/segmanifest", tag, s"$dir/segments", s"$dir/wsegments") { id =>
+      // metadata-class reads (centroids/cb/icent) come from the
+      // per-version LOCAL cache — bounded by design knobs, immutable
+      // per version, and already seeded when this JVM wrote them
+      val cents = Ivf.centroidBook(VersionedTable.readLatestLocal(spark, s"$dir/centroids"))
+      val book = Pq.codebook(VersionedTable.readLatestLocal(spark, s"$dir/cb"), dsub)
+      // EAGER: the caller's plan and the map-side assignment feed the
+      // codes write AND the sidecar write; both then run map-only off
+      // this checkpoint
+      val assigned = Ivf.probe(delta.select(col(idCol).as("id"), col(vecCol).as("v")),
+          cents, 1)
+        .select(col("q_id").as("id"), col("list_id"), col("q_v").as("v"))
+        .localCheckpoint()
+      // residual index (icent present): encode x − c(list) against the
+      // frozen codebook, same contract as the raw path
+      val codes =
+        if (VersionedTable.latestVersion(s"$dir/icent").isEmpty)
+          Pq.encode(assigned, book, "id", "v", scale, Seq("list_id"))
+        else {
+          val wq = assigned.select(col("id"), col("list_id"),
+            Pq.quantize(col("v"), scale).as("w"))
+          Pq.encode(residuals(wq, VersionedTable.localRows(spark, s"$dir/icent")),
+            book, "id", "rv", 1L, Seq("list_id"))
+        }
+      codes.select("id", "sub", "code", "list_id")
+        .write.mode("errorifexists").partitionBy("list_id")
+        .parquet(Segments.path(s"$dir/segments", id))
+      assigned.select(col("id").as("n_id"), Pq.quantize(col("v"), scale).as("nw"))
+        .write.mode("errorifexists").parquet(Segments.path(s"$dir/wsegments", id))
     }
-    // metadata-class reads (centroids/cb/icent/manifest) come from
-    // the per-version LOCAL cache — bounded by design knobs, immutable
-    // per version, and already seeded when this JVM wrote them
-    val cents = Ivf.centroidBook(graft.sources.VersionedTable
-      .readLatestLocal(spark, s"$dir/centroids"))
-    val book = Pq.codebook(graft.sources.VersionedTable
-      .readLatestLocal(spark, s"$dir/cb"), dsub)
-    // EAGER: the caller's plan and the map-side assignment feed the
-    // codes write AND the sidecar write; both then run map-only off
-    // this checkpoint
-    val assigned = Ivf.probe(delta.select(col(idCol).as("id"), col(vecCol).as("v")),
-        cents, 1)
-      .select(col("q_id").as("id"), col("list_id"), col("q_v").as("v"))
-      .localCheckpoint()
-    // residual index (icent present): encode x − c(list) against the
-    // frozen codebook, same contract as the raw path
-    val codes =
-      if (graft.sources.VersionedTable.latestVersion(s"$dir/icent").isEmpty)
-        Pq.encode(assigned, book, "id", "v", scale, Seq("list_id"))
-      else {
-        val wq = assigned.select(col("id"), col("list_id"),
-          Pq.quantize(col("v"), scale).as("w"))
-        Pq.encode(residuals(wq, graft.sources.VersionedTable.localRows(spark,
-          s"$dir/icent")), book, "id", "rv", 1L, Seq("list_id"))
-      }
-    val prior = Ivf.manifestSegs(spark, manifestDir)
-    // skip past orphan seg dirs from crashed appends (the Ivf lesson:
-    // deriving segId from the manifest alone recomputes the same id
-    // and dies forever on errorifexists, wedging the stream's replay)
-    val onDisk: Seq[Long] = {
-      val d = new java.io.File(s"$dir/segments")
-      if (!d.exists()) Seq.empty
-      else d.listFiles().toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith("seg="))
-        .map(_.getName.stripPrefix("seg=").toLong)
-    }
-    val segId = ((prior ++ onDisk) :+ 0L).max + 1
-    codes.select("id", "sub", "code", "list_id")
-      .write.mode("errorifexists").partitionBy("list_id")
-      .parquet(s"$dir/segments/seg=$segId")
-    assigned.select(col("id").as("n_id"), Pq.quantize(col("v"), scale).as("nw"))
-      .write.mode("errorifexists").parquet(s"$dir/wsegments/seg=$segId")
-    import spark.implicits._
-    graft.sources.VersionedTable.writeLocal(
-      (prior :+ segId).toDF("seg_id"), manifestDir, tag)
-    segId
-  }
 
   /** Compaction cadence (the [[Ivf.maintain]] contract): fold
     * segments into the base tables once the manifest exceeds
-    * `maxSegments`, keeping manifest collects and per-probe segment
-    * unions O(maxSegments) forever. */
+    * `maxSegments`, keeping the driver-held manifest and per-probe
+    * segment unions O(maxSegments) forever. */
   def maintain(spark: SparkSession, dir: String,
-      maxSegments: Int = 8): Option[Long] = {
-    // counted from the driver-held manifest rows: a count() on the
-    // local relation would still launch jobs
-    if (Ivf.manifestSegs(spark, s"$dir/segmanifest").size > maxSegments)
-      Some(compactSegments(spark, dir))
-    else None
-  }
+      maxSegments: Int = 8): Option[Long] =
+    Segments.maintain(spark, s"$dir/segmanifest", maxSegments)(compactSegments(spark, dir))
 
   /** Fold appended code/sidecar segments into the base versioned
     * tables: one new codes version (base ∪ segments, re-partitioned
     * by list) + one new wvecs version, then an empty manifest.
     * Superseded segment trees stay on disk for manifest rollback.
-    *
-    * Both fold writes are TAGGED with the folded segment-id set (the
-    * [[Ivf.compactSegments]] idempotence protocol, needed twice here
-    * because this index has two base tables): a crash anywhere
-    * between the first fold write and the manifest flip re-enters on
-    * the next maintain() call, finds whichever folds already
-    * committed (finishing lost pointer swaps), performs only the
-    * missing ones, and empties the manifest. Live readers subtract
-    * the serving version's folded ids from the manifest
-    * ([[Ivf.foldedSegIds]]), so there is NO duplicate-serving window
-    * at all — a probe racing the swap-to-manifest-flip gap, or a
-    * retry whose manifest gained an out-of-band append since the
-    * crashed fold, both read exactly base ∪ unfolded segments. */
-  def compactSegments(spark: SparkSession, dir: String): Long = {
-    val segs = Ivf.manifestSegs(spark, s"$dir/segmanifest").sorted
-    val tag = "compact:" + segs.mkString(",")
-    def foldOnce(tableDir: String, fold: => Long): Long =
-      graft.sources.VersionedTable.taggedVersion(tableDir, tag) match {
-        case Some(v) =>
-          if (graft.sources.VersionedTable.latestVersion(tableDir).forall(_ < v))
-            graft.sources.VersionedTable.swapTo(tableDir, v)
-          v
-        case None => fold
-      }
-    val cv = foldOnce(s"$dir/codes",
-      graft.sources.VersionedTable.writePartitioned(
-        byList(liveCodes(spark, dir).select("id", "sub", "code", "list_id")),
-        s"$dir/codes", "list_id", Some(tag)))
-    foldOnce(s"$dir/wvecs",
-      graft.sources.VersionedTable.write(
-        liveWvecs(spark, dir).select("n_id", "nw").hint("rebalance"),
-        s"$dir/wvecs", Some(tag)))
-    import spark.implicits._
-    graft.sources.VersionedTable.writeLocal(
-      Seq.empty[Long].toDF("seg_id"), s"$dir/segmanifest")
-    cv
-  }
+    * Both fold writes are tagged ([[Segments.compact]]): a crash
+    * anywhere between the first fold write and the manifest flip
+    * re-enters on the next maintain() call, reuses whichever folds
+    * already committed and performs only the missing ones. */
+  def compactSegments(spark: SparkSession, dir: String): Long =
+    Segments.compact(spark, s"$dir/segmanifest",
+      s"$dir/codes" -> (tag => VersionedTable.writePartitioned(
+        byList(liveCodes(spark, dir)), s"$dir/codes", "list_id", Some(tag))),
+      s"$dir/wvecs" -> (tag => VersionedTable.write(
+        liveWvecs(spark, dir).hint("rebalance"), s"$dir/wvecs", Some(tag))))
 
-  /** Base codes ∪ the manifest-listed segments not already folded
-    * into the serving base version ([[Ivf.foldedSegIds]]), read by
-    * their own `seg=<N>` paths ([[Ivf.readSegments]]). */
+  /** Base codes / sidecar ∪ the unfolded manifest-listed segments. */
   private def liveCodes(spark: SparkSession, dir: String): DataFrame =
-    live(spark, dir, "codes", "segments", Seq("id", "sub", "code", "list_id"))
+    Segments.live(spark, s"$dir/codes", s"$dir/segments", s"$dir/segmanifest")
 
   private def liveWvecs(spark: SparkSession, dir: String): DataFrame =
-    live(spark, dir, "wvecs", "wsegments", Seq("n_id", "nw"))
-
-  private def live(spark: SparkSession, dir: String, table: String,
-      segRoot: String, cols: Seq[String]): DataFrame = {
-    val base = graft.sources.VersionedTable.readLatest(spark, s"$dir/$table")
-    val segs = Ivf.manifestSegs(spark, s"$dir/segmanifest")
-      .filterNot(Ivf.foldedSegIds(s"$dir/$table"))
-    if (segs.isEmpty) base
-    else base.unionByName(
-      Ivf.readSegments(spark, s"$dir/$segRoot", segs, base.schema).select(cols.map(col): _*))
-  }
+    Segments.live(spark, s"$dir/wvecs", s"$dir/wsegments", s"$dir/segmanifest")
 
   /** Probe a persisted index: coarse probe against the stored
     * centroids, ADC over the probed lists' codes only (static

@@ -100,7 +100,7 @@ object VersionedTable {
   /** Tag carried by the SERVING version, if any — what lets a live
     * reader know which inputs the version it is about to read
     * already folded in (the compaction-window dedup in
-    * [[graft.similarity.Ivf.foldedSegIds]]). */
+    * [[Segments.live]]). */
   def servingTag(dir: String): Option[String] =
     latestVersion(dir).flatMap { v =>
       val p = Paths.get(dir, s"v=$v", "_TAG")
@@ -258,6 +258,12 @@ object VersionedTable {
       entry
     }
   }
+
+  /** Rows of version `v`: the driver-held serving rows when `v`
+    * serves, else one read of that version with its stored schema. */
+  def versionRows(spark: SparkSession, dir: String, v: Long): Seq[Row] =
+    if (latestVersion(dir).contains(v)) localRows(spark, dir)
+    else readVersion(spark, dir, v).collect().toSeq
 
   def readLatestLocal(spark: SparkSession, dir: String,
       maxRows: Int = MetadataRows): DataFrame = {

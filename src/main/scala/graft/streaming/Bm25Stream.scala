@@ -17,28 +17,13 @@ object Bm25Stream {
 
   def maintainBm25(docs: DataFrame, indexDir: String, idCol: String,
       textCol: String, lineage: String = "run0"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import java.nio.file.{Files, Paths}
-        val marker = Paths.get(indexDir, s"_batch-$lineage-$batchId")
-        if (!Files.exists(marker)) {
-          if (!batch.isEmpty) {
-            graft.operators.SegmentedBm25.append(batch, idCol, textCol, indexDir)
-            // compaction cadence: bounds segment count, tombstone
-            // volume, and the driver-side manifest for ANY number of
-            // micro-batches (see SegmentedBm25.maintain). Crash-safe
-            // mid-maintain: an interrupted compact leaves an orphan
-            // segment dir the manifest never references.
-            graft.operators.SegmentedBm25.maintain(batch.sparkSession, indexDir)
-          }
-          Files.createDirectories(Paths.get(indexDir))
-          val tmp = Paths.get(indexDir, s"_batch-$lineage-$batchId.tmp")
-          Files.writeString(tmp, "done")
-          Files.move(tmp, marker,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-        ()
-      }
-      .start()
+    IndexFeed.start(docs, indexDir, lineage) { (batch, _) =>
+      graft.operators.SegmentedBm25.append(batch, idCol, textCol, indexDir)
+      // compaction cadence: bounds segment count, tombstone volume,
+      // and the driver-side manifest for ANY number of micro-batches
+      // (see SegmentedBm25.maintain). Crash-safe mid-maintain: an
+      // interrupted compact leaves an orphan segment dir the manifest
+      // never references.
+      graft.operators.SegmentedBm25.maintain(batch.sparkSession, indexDir)
+    }
 }

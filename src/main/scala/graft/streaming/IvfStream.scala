@@ -14,29 +14,13 @@ object IvfStream {
 
   def maintainIvf(vecs: DataFrame, indexDir: String,
       lineage: String = "run0"): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import java.nio.file.{Files, Paths}
-        val marker = Paths.get(indexDir, s"_batch-$lineage-$batchId")
-        if (!Files.exists(marker)) {
-          if (!batch.isEmpty) {
-            // tagged append: a replay whose manifest already committed
-            // is skipped instead of double-appending (Ivf.appendToIndex)
-            graft.similarity.Ivf.appendToIndex(batch.sparkSession, indexDir,
-              batch.toDF(), Some(s"$lineage-$batchId"))
-            // compaction cadence: folds segments into the base table
-            // once they exceed the bound, keeping manifest + probe
-            // cost O(maxSegments) for any number of micro-batches
-            graft.similarity.Ivf.maintain(batch.sparkSession, indexDir)
-          }
-          Files.createDirectories(Paths.get(indexDir))
-          val tmp = Paths.get(indexDir, s"_batch-$lineage-$batchId.tmp")
-          Files.writeString(tmp, "done")
-          Files.move(tmp, marker,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-        ()
-      }
-      .start()
+    IndexFeed.start(vecs, indexDir, lineage) { (batch, tag) =>
+      // tagged append: a replay whose manifest already committed is
+      // skipped instead of double-appending (Ivf.appendToIndex)
+      graft.similarity.Ivf.appendToIndex(batch.sparkSession, indexDir, batch, Some(tag))
+      // compaction cadence: folds segments into the base table once
+      // they exceed the bound, keeping manifest + probe cost
+      // O(maxSegments) for any number of micro-batches
+      graft.similarity.Ivf.maintain(batch.sparkSession, indexDir)
+    }
 }

@@ -19,26 +19,11 @@ object PqStream {
 
   def maintainIvfpq(vecs: DataFrame, indexDir: String,
       lineage: String = "run0"): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import java.nio.file.{Files, Paths}
-        val marker = Paths.get(indexDir, s"_batch-$lineage-$batchId")
-        if (!Files.exists(marker)) {
-          if (!batch.isEmpty) {
-            graft.similarity.Ivfpq.appendToIndex(batch.sparkSession,
-              indexDir, batch.toDF(), tag = Some(s"$lineage-$batchId"))
-            // compaction cadence: manifest + probe unions stay
-            // O(maxSegments) for any number of micro-batches
-            graft.similarity.Ivfpq.maintain(batch.sparkSession, indexDir)
-          }
-          Files.createDirectories(Paths.get(indexDir))
-          val tmp = Paths.get(indexDir, s"_batch-$lineage-$batchId.tmp")
-          Files.writeString(tmp, "done")
-          Files.move(tmp, marker,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-        ()
-      }
-      .start()
+    IndexFeed.start(vecs, indexDir, lineage) { (batch, tag) =>
+      graft.similarity.Ivfpq.appendToIndex(batch.sparkSession, indexDir, batch,
+        tag = Some(tag))
+      // compaction cadence: manifest + probe unions stay
+      // O(maxSegments) for any number of micro-batches
+      graft.similarity.Ivfpq.maintain(batch.sparkSession, indexDir)
+    }
 }

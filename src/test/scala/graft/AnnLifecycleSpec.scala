@@ -1,14 +1,14 @@
 package graft
 
 import graft.functions.Vectors
-import graft.similarity.Ivfpq
+import graft.similarity.{Ivf, Ivfpq}
 import graft.sources.VersionedTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** IVF-PQ index lifecycle cost shape: the appended segment is written
-  * by map-only plans, each lifecycle call stays within a fixed job
-  * budget, and live reads list only the manifest's segments. */
+/** IVF and IVF-PQ index lifecycle cost shape: the appended segment is
+  * written by map-only plans, each lifecycle call stays within a fixed
+  * job budget, and live reads list only the manifest's segments. */
 class AnnLifecycleSpec extends AnyFunSuite {
   import TestSession._
 
@@ -55,6 +55,30 @@ class AnnLifecycleSpec extends AnyFunSuite {
       assert(jobs.size <= budget,
         s"$name launched ${jobs.size} jobs, budget $budget:\n${jobs.mkString("\n")}")
     }
+    assert(maintain.result.isDefined && idle.result.isEmpty)
+  }
+
+  test("plain IVF append, search and maintain each stay within a job budget") {
+    val dir = fresh("graft_ivf_jobs")
+    val corpus = embs.filter(col("id") >= 10 && col("id") % 4 =!= 0).localCheckpoint()
+    val delta = embs.filter(col("id") >= 10 && col("id") % 4 === 0)
+      .select("id", "v").localCheckpoint()
+    val queries = embs.filter(col("id") < 10).select("id", "v").localCheckpoint()
+    Ivf.buildIndex(corpus, "label", "v", dir)
+    val append = JobCount.of(spark)(Ivf.appendToIndex(spark, dir, delta))
+    val search = JobCount.of(spark)(
+      Ivf.searchIndex(spark, dir, queries, k = 5, nProbe = 3).collect())
+    val idle = JobCount.of(spark)(Ivf.maintain(spark, dir, maxSegments = 8))
+    val maintain = JobCount.of(spark)(Ivf.maintain(spark, dir, maxSegments = 0))
+    val budgets = Seq(("appendToIndex", append.jobs, 2),
+      ("searchIndex", search.jobs, 4), ("maintain (idle)", idle.jobs, 0),
+      ("maintain (fold)", maintain.jobs, 2))
+    budgets.foreach { case (name, jobs, budget) =>
+      info(s"$name: ${jobs.size} jobs")
+      assert(jobs.size <= budget,
+        s"$name launched ${jobs.size} jobs, budget $budget:\n${jobs.mkString("\n")}")
+    }
+    assert(append.result == 1 && search.result.nonEmpty)
     assert(maintain.result.isDefined && idle.result.isEmpty)
   }
 
